@@ -3,10 +3,12 @@
 The reference's SplitToAttribute turns an untyped CSV row into a bag of
 stringly-typed attributes (reference: SplitToAttribute.java:144-210). The
 Spark-native re-expression parses the JSON change payload into *typed
-columns* with ``from_json`` against an explicit schema — corrupt payloads
-yield a null struct and are routed to quarantine instead of aborting the
-epoch (the reference's per-row failure relationship,
-ExecuteRuleEngine.java:477-481,610-662, becomes a filter).
+columns* in one staged VARIANT parse: ``try_parse_json`` once per row into
+a column, then one ``try_variant_get`` per registered field. A payload that
+is not a parseable JSON object is flagged ``_corrupt`` and routed to
+quarantine instead of aborting the epoch (the reference's per-row failure
+relationship, ExecuteRuleEngine.java:477-481,610-662, becomes a filter); a
+field that fails its type cast comes out null without rejecting the row.
 
 Intentional divergences from the reference's SplitToAttribute quirks
 (documented in SURVEY.md §2.2 P1): separator-as-regex and silent
@@ -20,24 +22,6 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-PAYLOAD_V1 = T.StructType(
-    [
-        T.StructField("lang", T.StringType()),
-        T.StructField("content", T.StringType()),
-    ]
-)
-
-PAYLOAD_V2 = T.StructType(
-    [
-        T.StructField("language", T.StringType()),
-        T.StructField("content", T.StringType()),
-        T.StructField("size_bytes", T.LongType()),
-    ]
-)
-
-
-CORRUPT_COL = "_corrupt_record"
 
 VARIANT_COL = "_pv"  # staged parsed-variant column (see parse_envelope)
 
@@ -103,24 +87,4 @@ def malformed_json(payload_json):
     head = F.substring(F.ltrim(payload_json), 1, 1)
     return payload_json.isNotNull() & (
         (head != "{") | F.try_parse_json(payload_json).isNull()
-    )
-
-
-def corrupt_flag(payload_json, payload_schema: T.StructType):
-    """Boolean Column: true when payload_json is non-null but unparseable
-    (for quarantining raw rows without going through parse_envelope)."""
-    schema_with_cr = T.StructType(
-        payload_schema.fields + [T.StructField(CORRUPT_COL, T.StringType())]
-    )
-    p = F.from_json(
-        payload_json, schema_with_cr, {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL}
-    )
-    return payload_json.isNotNull() & (p.isNull() | p[CORRUPT_COL].isNotNull())
-
-
-def quarantine_split(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(good, quarantined) — the reference's 'failure' relationship."""
-    return (
-        parsed.filter(~F.col("_corrupt")).drop("_corrupt"),
-        parsed.filter(F.col("_corrupt")).drop("_corrupt"),
     )

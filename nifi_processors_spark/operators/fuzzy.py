@@ -68,31 +68,16 @@ def exact_dedup_keep(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 # ---------------- shingling + minhash ----------------
 
 
-def word_shingles(c: Column, n: int = 3) -> Column:
-    """Distinct word n-grams as an array<string> (expression-only).
-
-    Perf caveat: as a single expression the `words` subtree is inlined
-    (and re-evaluated) inside the transform lambda; on hot paths use
-    ``with_word_shingles`` which stages the words array as a column first
-    (~3x faster on real documents)."""
-    words = F.split(normalize_text(c), " ")
-    k = F.greatest(F.size(words) - (n - 1), F.lit(1))
-    # try_element_at: a doc shorter than n words indexes past the array —
-    # ANSI mode (Spark 4 default) would THROW on element_at; try_ returns
-    # null, concat_ws skips it, and the doc degrades to its partial gram
-    # (DuckDB mirrors this: list extract out-of-range is NULL there too)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), k - 1),
-            lambda i: F.concat_ws(" ", *[F.try_element_at(words, i + j + 1) for j in range(n)]),
-        )
-    )
-
-
 def with_word_shingles(df: DataFrame, text_col: str, out_col: str, n: int = 3) -> DataFrame:
     """Staged shingling: materialize the split-words array in its own
     projection so the n-gram transform references a bound column instead of
-    re-running the split per element."""
+    re-running the split per element (inlined, the split re-ran per
+    n-gram: ~3x slower on real documents).
+
+    ``try_element_at``: a doc shorter than n words indexes past the array —
+    ANSI mode (Spark 4 default) would THROW on element_at; try_ returns
+    null, concat_ws skips it, and the doc degrades to its partial gram
+    (DuckDB mirrors this: list extract out-of-range is NULL there too)."""
     words = "_ws_words"
     out = (
         df.withColumn(words, F.split(normalize_text(F.col(text_col)), " "))
@@ -134,12 +119,6 @@ def minhash_signature_from_hashes(hashes: Column, num_hashes: int = 64) -> Colum
     return F.array(
         *[F.array_min(F.transform(hashes, mk(i))) for i in range(num_hashes)]
     )
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 64) -> Column:
-    """Compat wrapper — hot paths stage ``minhash_base_hashes`` as a column
-    first (minhash_lsh_pairs does)."""
-    return minhash_signature_from_hashes(minhash_base_hashes(shingles), num_hashes)
 
 
 def lsh_bands(sig: Column, bands: int, rows: int) -> Column:
@@ -317,18 +296,6 @@ def lsh_bucket_stats(
 
 
 # ---------------- simhash ----------------
-
-
-def simhash64(shingles: Column, bits: int = PORTABLE_BITS) -> Column:
-    """Classic SimHash: bit b is 1 iff sum over shingles of
-    (+1 if bit b of portable_hash60(s) else -1) > 0. Expression-only — the
-    bit loop is unrolled driver-side (shift amounts must be literals).
-    Default 60 bits = the informative bits of the portable hash.
-
-    Perf caveat: inlines the shingle-hash transform into every bit counter;
-    hot paths should stage the hash array as a column and call
-    ``simhash64_from_hashes`` (simhash_pairs / with_simhash do)."""
-    return simhash64_from_hashes(F.transform(shingles, portable_hash60), bits)
 
 
 def with_simhash(df: DataFrame, text_col: str, out_col: str, shingle_n: int = 2) -> DataFrame:

@@ -64,12 +64,6 @@ _SYS_TYPES = {
 }
 
 
-def _atomic_write_json(path: str, obj: Any) -> None:
-    # local: tmp + os.replace; URI paths (hdfs://, s3a://): Hadoop FS —
-    # see plans/fsio.py for the atomicity contract per scheme
-    fsio.write_json_atomic(path, obj)
-
-
 def bucket_expr(key: list[str], n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(*[F.col(c) for c in key]), F.lit(n_buckets)).cast("int")
 
@@ -329,6 +323,38 @@ def _group_head(key: list[str], w) -> Column:
     return head | diff
 
 
+def _lww_order(key: list[str], *extra: Column) -> list[Column]:
+    """The LWW comparator as a sort order: key ascending, then the greatest
+    (commit_seq, event_seq) first, then the later-written ``_delta_seq``
+    (byte-unequal ties — drift re-merge, crash replay — resolve to the
+    later write); ``extra`` appends further tie-breaks."""
+    return [
+        *[F.col(c) for c in key],
+        F.col("_commit_seq").desc(),
+        F.col("_event_seq").desc(),
+        F.col("_delta_seq").desc(),
+        *extra,
+    ]
+
+
+def _lww_heads(df: DataFrame, key: list[str], part: str, *extra: Column) -> DataFrame:
+    """Per-key LWW winners: sort within partitions of ``part`` by
+    ``_lww_order`` and keep each key group's head. ``df`` must already be
+    distributed by ``part`` (a key lives in exactly one bucket), so the
+    resolve adds no exchange of its own and its output stays
+    bucket-clustered for a ``partitionBy`` write."""
+    w = Window.partitionBy(part).orderBy(*_lww_order(key, *extra))
+    return df.withColumn("_head", _group_head(key, w)).filter(F.col("_head")).drop("_head")
+
+
+def _replace_buckets(buckets: dict, affected: list, written: dict) -> dict:
+    """``buckets`` with each ``affected`` bucket replaced by its freshly
+    written files; an affected bucket whose rows all went away wrote no
+    dir and becomes empty."""
+    return {**buckets, **written,
+            **{str(b): [] for b in affected if str(b) not in written}}
+
+
 class IceliteTable:
     """A single icelite table rooted at ``path``.
 
@@ -384,7 +410,7 @@ class IceliteTable:
         }
         if bloom_cols:
             snap["bloom_cols"] = list(bloom_cols)
-        _atomic_write_json(fsio.join(t.meta_dir, "v0.json"), snap)
+        fsio.write_json_atomic(fsio.join(t.meta_dir, "v0.json"), snap)
         fsio.publish_json(fsio.join(t.meta_dir, "VERSION"), 0)
         return t
 
@@ -462,6 +488,43 @@ class IceliteTable:
                 for b, d in bdirs
             ]
             return {b: f.result() for b, f in futs}
+
+    def _write_buckets(
+        self, df: DataFrame, snap: dict, kind: str | None = None,
+        max_rows_per_file: int | None = None,
+    ) -> dict[str, list[dict]]:
+        """Write ``df`` (already distributed by ``_bucket``) as the data of
+        ``snap``'s successor — one ``_bucket=<b>`` dir per non-empty bucket
+        under ``snap{sid+1}`` — and return bucket -> manifest entries
+        (footers read by the pool above). A bucket with no rows writes no
+        dir and is absent from the result; the caller folds it."""
+        out_dir = fsio.join(self.data_dir, f"snap{snap['snapshot_id'] + 1}")
+        writer = df.write.mode("overwrite").partitionBy("_bucket")
+        if max_rows_per_file is not None:
+            writer = writer.option("maxRecordsPerFile", max_rows_per_file)
+        writer.parquet(out_dir)
+        bdirs = [
+            (entry.split("=", 1)[1], fsio.join(out_dir, entry))
+            for entry in fsio.listdir(out_dir)
+            if entry.startswith("_bucket=")
+        ]
+        return self._bucket_entries_par(bdirs, snap["schema_version"], kind)
+
+    def _commit_next(self, snap: dict, buckets: dict, lineage: dict,
+                     publish: bool = True, **meta: Any) -> int:
+        """Commit snapshot ``sid+1`` on top of ``snap``: every property of
+        ``snap`` carries forward (key, schemas, bloom_cols, tombstone
+        watermark, ...) unless ``meta`` overrides it. The snapshot JSON is
+        written atomically (tmp + rename locally; see plans/fsio.py for
+        URI paths); the VERSION pointer moves only if ``publish`` —
+        ``publish=False`` stages the snapshot for write-audit-publish."""
+        sid = snap["snapshot_id"] + 1
+        new_snap = {**snap, "snapshot_id": sid, "parent": snap["snapshot_id"],
+                    "buckets": buckets, "lineage": lineage, **meta}
+        fsio.write_json_atomic(fsio.join(self.meta_dir, f"v{sid}.json"), new_snap)
+        if publish:
+            fsio.publish_json(fsio.join(self.meta_dir, "VERSION"), sid)
+        return sid
 
     def current_snapshot_id(self) -> int:
         # replace-safe pointer: on remote stores this resolves the newest
@@ -928,20 +991,13 @@ class IceliteTable:
                 raise ValueError(f"add: column {name!r} exists")
             fields.append({"id": next_id, "name": name, "type": dtype.json()})
             next_id += 1
-        new_sid = snap["snapshot_id"] + 1
-        new_snap = dict(snap)
-        new_snap.update(
-            {
-                "snapshot_id": new_sid,
-                "parent": snap["snapshot_id"],
-                "schema_version": cur_ver + 1,
-                "schemas": {**snap["schemas"], str(cur_ver + 1): fields},
-                "next_field_id": next_id,
-                "lineage": lineage or {"op": "alter", "renames": renames, "adds": [a[0] for a in adds]},
-            }
+        return self._commit_next(
+            snap, snap["buckets"],
+            lineage or {"op": "alter", "renames": renames, "adds": [a[0] for a in adds]},
+            schema_version=cur_ver + 1,
+            schemas={**snap["schemas"], str(cur_ver + 1): fields},
+            next_field_id=next_id,
         )
-        self._commit(new_snap)
-        return new_sid
 
     # ---------------- MERGE-ON-READ (delta append + read-time resolve) ---------
 
@@ -986,36 +1042,18 @@ class IceliteTable:
             (F.col("op") == "D").alias("_deleted"),
             F.col("_bucket"),
         )
-        out_dir = fsio.join(self.data_dir, f"snap{new_sid}")
-        delta.repartition(width, F.col("_bucket")).write.mode(
-            "overwrite"
-        ).partitionBy("_bucket").parquet(out_dir)
-
-        new_buckets = {b: list(files) for b, files in snap["buckets"].items()}
-        bdirs = [
-            (entry.split("=", 1)[1], fsio.join(out_dir, entry))
-            for entry in fsio.listdir(out_dir)
-            if entry.startswith("_bucket=")
-        ]
-        written = len(bdirs)
-        for b, entries in self._bucket_entries_par(
-            bdirs, snap["schema_version"], kind="delta"
-        ).items():
-            new_buckets.setdefault(b, [])
-            new_buckets[b] += entries
-        if written == 0:  # empty change-set discovered post-write
+        written = self._write_buckets(
+            delta.repartition(width, F.col("_bucket")), snap, kind="delta")
+        if not written:  # empty change-set discovered post-write
             return snap["snapshot_id"], {"affected_buckets": 0}
-        n_affected = written if affected is None else len(affected)
-        new_snap = dict(snap)
-        new_snap.update(
-            {
-                "snapshot_id": new_sid,
-                "parent": snap["snapshot_id"],
-                "buckets": new_buckets,
-                "lineage": lineage or {"op": "merge_mor"},
-            }
+        old = snap["buckets"]
+        self._commit_next(
+            snap,
+            {**old, **{b: old.get(b, []) + es for b, es in written.items()}},
+            lineage or {"op": "merge_mor"},
+            publish=publish,
         )
-        self._commit(new_snap, publish=publish)
+        n_affected = len(written) if affected is None else len(affected)
         return new_sid, {"affected_buckets": n_affected, "snapshot_id": new_sid}
 
     def delta_file_count(self) -> int:
@@ -1070,51 +1108,19 @@ class IceliteTable:
         # two full exchanges of the table per compaction. Instead take the
         # raw base∪delta rows, distribute by bucket ONCE, sort within
         # partitions by (key, seq desc) and keep each key group's head —
-        # byte-identical winners (same comparator as _resolve_lww), half
+        # byte-identical winners (the same _lww_heads as _resolve_lww), half
         # the data movement.
         raw = self.read(buckets=buckets, include_deleted=True, _resolve=False)
-        out_cols = raw.columns
-        w = Window.partitionBy("_bucket").orderBy(
-            *[F.col(c) for c in key],
-            F.col("_commit_seq").desc(),
-            F.col("_event_seq").desc(),
-            F.col("_delta_seq").desc(),
-        )
-        resolved = (
+        resolved = _lww_heads(
             raw.withColumn("_bucket", bucket_expr(key, snap["n_buckets"]))
-            .repartition(self._merge_partitions(len(buckets)), F.col("_bucket"))
-            .withColumn("_first", _group_head(key, w))
-            .filter(F.col("_first"))
-            .select(*out_cols, "_bucket")
+            .repartition(self._merge_partitions(len(buckets)), F.col("_bucket")),
+            key, "_bucket",
         )
-        new_sid = snap["snapshot_id"] + 1
-        out_dir = fsio.join(self.data_dir, f"snap{new_sid}")
-        (
-            resolved.write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(out_dir)
+        written = self._write_buckets(resolved, snap)
+        return self._commit_next(
+            snap, _replace_buckets(snap["buckets"], buckets, written),
+            lineage or {"op": "compact", "buckets": buckets},
         )
-        new_buckets = {b: list(files) for b, files in snap["buckets"].items()}
-        for b in buckets:  # a compacted bucket that came out empty stays empty
-            new_buckets[str(b)] = []
-        bdirs = [
-            (entry.split("=", 1)[1], fsio.join(out_dir, entry))
-            for entry in fsio.listdir(out_dir)
-            if entry.startswith("_bucket=")
-        ]
-        for b, entries in self._bucket_entries_par(bdirs, snap["schema_version"]).items():
-            new_buckets[b] = entries
-        new_snap = dict(snap)
-        new_snap.update(
-            {
-                "snapshot_id": new_sid,
-                "parent": snap["snapshot_id"],
-                "buckets": new_buckets,
-                "lineage": lineage or {"op": "compact", "buckets": buckets},
-            }
-        )
-        self._commit(new_snap)
-        return new_sid
 
     def _global_ranges(self, snap: dict, cols: list[str]
                        ) -> dict[str, tuple[float, float]] | None:
@@ -1168,6 +1174,8 @@ class IceliteTable:
         compact scopes its buckets."""
         if not sort_cols:
             raise ValueError("cluster() needs at least one sort column")
+        if max_rows_per_file is not None and max_rows_per_file < 1:
+            raise ValueError(f"max_rows_per_file must be >= 1, got {max_rows_per_file}")
         snap = self.snapshot()
         key, nb = snap["key"], snap["n_buckets"]
         non_empty = [b for b, fs in snap["buckets"].items() if fs]
@@ -1197,8 +1205,6 @@ class IceliteTable:
             resolved = resolved.withColumn(
                 "_z", zorder_column(sort_cols, ranges, bits=zorder_bits))
             order = ["_bucket", "_z"]
-        new_sid = snap["snapshot_id"] + 1
-        out_dir = fsio.join(self.data_dir, f"snap{new_sid}")
         clustered = (
             resolved.withColumn("_bucket", bucket_expr(key, nb))
             .repartition(self._merge_partitions(len(non_empty)), F.col("_bucket"))
@@ -1206,33 +1212,13 @@ class IceliteTable:
         )
         if zorder:
             clustered = clustered.drop("_z")
-        writer = clustered.write.mode("overwrite").partitionBy("_bucket")
-        if max_rows_per_file is not None:
-            if max_rows_per_file < 1:
-                raise ValueError(f"max_rows_per_file must be >= 1, got {max_rows_per_file}")
-            writer = writer.option("maxRecordsPerFile", max_rows_per_file)
-        writer.parquet(out_dir)
-        new_buckets: dict[str, list] = {b: [] for b in snap["buckets"]}
-        for entry in fsio.listdir(out_dir):
-            if not entry.startswith("_bucket="):
-                continue
-            b = entry.split("=", 1)[1]
-            bdir = fsio.join(out_dir, entry)
-            new_buckets[b] = self._bucket_entries(bdir, snap["schema_version"])
-        new_snap = dict(snap)
-        new_snap.update(
-            {
-                "snapshot_id": new_sid,
-                "parent": snap["snapshot_id"],
-                "buckets": new_buckets,
-                "clustered_by": list(sort_cols),
-                "zordered": bool(zorder),
-                "lineage": lineage or {"op": "cluster", "sort_cols": list(sort_cols),
-                                       "zorder": bool(zorder)},
-            }
+        written = self._write_buckets(clustered, snap, max_rows_per_file=max_rows_per_file)
+        return self._commit_next(
+            snap, {**{b: [] for b in snap["buckets"]}, **written},
+            lineage or {"op": "cluster", "sort_cols": list(sort_cols), "zorder": bool(zorder)},
+            clustered_by=list(sort_cols),
+            zordered=bool(zorder),
         )
-        self._commit(new_snap)
-        return new_sid
 
     # ---------------- MERGE (copy-on-write, bucketed, LWW vs state) ----------------
 
@@ -1267,9 +1253,8 @@ class IceliteTable:
         """
         snap = self.snapshot()
         key = snap["key"]
-        nb = snap["n_buckets"]
         data_cols = self.field_names(snap)
-        bexpr = bucket_expr(key, nb)
+        bexpr = bucket_expr(key, snap["n_buckets"])
 
         ch = changes.withColumn("_bucket", bexpr)
         if affected is None:
@@ -1300,54 +1285,18 @@ class IceliteTable:
         # exchange, and the output is already bucket-clustered for the
         # partitionBy write. (A window partitioned by the full key would
         # shuffle on key and then AGAIN on bucket — 2x the data movement.)
-        w = Window.partitionBy("_bucket").orderBy(
-            *[F.col(c) for c in key],
-            F.col("_commit_seq").desc(),
-            F.col("_event_seq").desc(),
-            F.col("_delta_seq").desc(),
-            F.col("_is_change").desc(),
+        # The per-key winner is kept even when it is a delete: tombstones
+        # carry the delete's sequence so older late events cannot win later.
+        survivors = _lww_heads(
+            unioned.repartition(self._merge_partitions(len(affected)), F.col("_bucket")),
+            key, "_bucket", F.col("_is_change").desc(),
+        ).select(*data_cols, *SYS_COLS, "_bucket")
+        written = self._write_buckets(survivors, snap)
+        self._commit_next(
+            snap, _replace_buckets(snap["buckets"], affected, written),
+            lineage or {"op": "merge"}, publish=publish,
         )
-        # the per-key winner is kept even when it is a delete: tombstones
-        # carry the delete's sequence so older late events cannot win later
-        survivors = (
-            unioned.repartition(self._merge_partitions(len(affected)), F.col("_bucket"))
-            .withColumn("_first", _group_head(key, w))
-            .filter(F.col("_first"))
-            .select(*data_cols, *SYS_COLS, "_bucket")
-        )
-
-        new_sid = snap["snapshot_id"] + 1
-        out_dir = fsio.join(self.data_dir, f"snap{new_sid}")
-        survivors.write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
-
-        new_buckets = dict(snap["buckets"])
-        rows_written = 0
-        written_buckets = set()
-        bdirs = [
-            (entry.split("=", 1)[1], fsio.join(out_dir, entry))
-            for entry in fsio.listdir(out_dir)
-            if entry.startswith("_bucket=")
-        ]
-        for b, entries in self._bucket_entries_par(bdirs, snap["schema_version"]).items():
-            new_buckets[str(int(b))] = entries
-            written_buckets.add(int(b))
-        # an affected bucket whose rows all got deleted writes no dir -> empty it
-        for b in affected:
-            if b not in written_buckets:
-                new_buckets[str(b)] = []
-
-        stats = {"affected_buckets": len(affected), "snapshot_id": new_sid}
-        new_snap = dict(snap)
-        new_snap.update(
-            {
-                "snapshot_id": new_sid,
-                "parent": snap["snapshot_id"],
-                "buckets": new_buckets,
-                "lineage": lineage or {"op": "merge"},
-            }
-        )
-        self._commit(new_snap, publish=publish)
-        return new_sid, stats
+        return new_sid, {"affected_buckets": len(affected), "snapshot_id": new_sid}
 
     def expire_snapshots(self, keep_last: int = 2) -> list[int]:
         """Storage hygiene for a long-running table: delete snapshot metadata
@@ -1445,45 +1394,14 @@ class IceliteTable:
         if n_buckets is not None and n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
         key, nb = snap["key"], (n_buckets if n_buckets is not None else snap["n_buckets"])
-        data_cols = self.field_names(snap)
-        new_sid = snap["snapshot_id"] + 1
-        out_dir = fsio.join(self.data_dir, f"snap{new_sid}")
-        (
-            df.withColumn("_bucket", bucket_expr(key, nb))
-            .repartition(nb, F.col("_bucket"))
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(out_dir)
+        written = self._write_buckets(
+            df.withColumn("_bucket", bucket_expr(key, nb)).repartition(nb, F.col("_bucket")),
+            snap,
         )
-        new_buckets: dict[str, list] = {str(b): [] for b in range(nb)}
-        for entry in fsio.listdir(out_dir):
-            if not entry.startswith("_bucket="):
-                continue
-            b = entry.split("=", 1)[1]
-            bdir = fsio.join(out_dir, entry)
-            new_buckets[b] = self._bucket_entries(bdir, snap["schema_version"])
-        new_snap = dict(snap)
-        new_snap.update(
-            {
-                "snapshot_id": new_sid,
-                "parent": snap["snapshot_id"],
-                "n_buckets": nb,
-                "buckets": new_buckets,
-                "lineage": lineage or {"op": "overwrite"},
-            }
+        return self._commit_next(
+            snap, {**{str(b): [] for b in range(nb)}, **written},
+            lineage or {"op": "overwrite"}, n_buckets=nb, **(extra_meta or {}),
         )
-        if extra_meta:
-            new_snap.update(extra_meta)
-        self._commit(new_snap)
-        return new_sid
-
-    # ---------------- commit ----------------
-
-    def _commit(self, snap: dict, publish: bool = True) -> None:
-        sid = snap["snapshot_id"]
-        _atomic_write_json(fsio.join(self.meta_dir, f"v{sid}.json"), snap)
-        if publish:
-            fsio.publish_json(fsio.join(self.meta_dir, "VERSION"), sid)
 
     # ---------------- refs, rollback, write-audit-publish ----------------
 
@@ -1498,14 +1416,11 @@ class IceliteTable:
         cur = self.snapshot()
         if snapshot_id == cur["snapshot_id"]:
             return snapshot_id
-        new_snap = dict(target)
-        new_snap.update({
-            "snapshot_id": cur["snapshot_id"] + 1,
-            "parent": cur["snapshot_id"],
-            "lineage": lineage or {"op": "rollback", "to": snapshot_id},
-        })
-        self._commit(new_snap)
-        return new_snap["snapshot_id"]
+        # the new snapshot is the target's, renumbered on top of the head
+        return self._commit_next(
+            {**target, "snapshot_id": cur["snapshot_id"]}, target["buckets"],
+            lineage or {"op": "rollback", "to": snapshot_id},
+        )
 
     def refs(self) -> dict[str, int]:
         """Named refs (tags): a replace-safe pointer file mapping
@@ -1575,20 +1490,8 @@ def _resolve_lww(df: DataFrame, key: list[str], n_buckets: int) -> DataFrame:
     shuffle + sort-within-partitions + lag head-of-group (same shape as the
     CoW merge; byte-unequal ties — drift re-merge, crash replay — resolve
     to the later _delta_seq)."""
-    cols = [c for c in df.columns]
-    b = bucket_expr(key, n_buckets)
-    w = Window.partitionBy("_rb").orderBy(
-        *[F.col(c) for c in key],
-        F.col("_commit_seq").desc(),
-        F.col("_event_seq").desc(),
-        F.col("_delta_seq").desc(),  # later-written delta wins byte-unequal ties
-    )
-    with_b = df.withColumn("_rb", b).repartition(F.col("_rb"))
-    return (
-        with_b.withColumn("_head", _group_head(key, w))
-        .filter(F.col("_head"))
-        .select(*cols)
-    )
+    with_b = df.withColumn("_rb", bucket_expr(key, n_buckets)).repartition(F.col("_rb"))
+    return _lww_heads(with_b, key, "_rb").select(*df.columns)
 
 
 def _type_from_json(tj: str) -> T.DataType:

@@ -39,39 +39,32 @@ def mor_tbl(spark, tmp_path):
     return t
 
 
-def test_compact_single_exchange_and_identical_state(spark, mor_tbl):
+def test_compact_single_exchange_and_identical_state(spark, mor_tbl, monkeypatch):
     """The fused compaction moves the table through exactly ONE exchange
     (resolve + bucket-clustered write share it) and the compacted state
     equals the pre-compaction resolved read."""
     before = {(r["k"],): r["v"] for r in mor_tbl.read().collect()}
-    # plan-shape evidence: rebuild the fused resolve plan the way
-    # compact() does and count exchanges in its explain
+    # plan-shape evidence: explain the DataFrame compact() itself hands to
+    # the bucket writer, so a change to compact's plan shows here
     import contextlib
     import io
 
-    from pyspark.sql import Window
+    plans = []
+    write_buckets = mor_tbl._write_buckets
 
-    from nifi_processors_spark.plans.table import _group_head, bucket_expr
+    def spy(df, *args, **kwargs):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("simple")
+        plans.append(buf.getvalue())
+        return write_buckets(df, *args, **kwargs)
 
-    snap = mor_tbl.snapshot()
-    raw = mor_tbl.read(buckets=mor_tbl.delta_buckets(1), include_deleted=True,
-                       _resolve=False)
-    key = snap["key"]
-    w = Window.partitionBy("_bucket").orderBy(
-        *[F.col(c) for c in key], F.col("_commit_seq").desc(),
-        F.col("_event_seq").desc(), F.col("_delta_seq").desc())
-    fused = (raw.withColumn("_bucket", bucket_expr(key, snap["n_buckets"]))
-             .repartition(2, F.col("_bucket"))
-             .withColumn("_first", _group_head(key, w))
-             .filter(F.col("_first")).select(*raw.columns, "_bucket"))
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        fused.explain("simple")
-    plan = buf.getvalue()
+    monkeypatch.setattr(mor_tbl, "_write_buckets", spy)
+    mor_tbl.compact(min_deltas=1)
+    (plan,) = plans
     n_exchange = plan.count("Exchange") - plan.count("BroadcastExchange")
     assert n_exchange == 1, plan
 
-    mor_tbl.compact(min_deltas=1)
     assert mor_tbl.delta_file_count() == 0
     after = {(r["k"],): r["v"] for r in mor_tbl.read().collect()}
     assert after == before

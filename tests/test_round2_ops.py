@@ -9,8 +9,7 @@ import pytest
 from nifi_processors_spark.operators import fuzzy
 from nifi_processors_spark.operators.template import parse_velocity, render_velocity
 from nifi_processors_spark.plans.configstate import RuleConfigTracker
-
-REF_ZIP = "/root/reference/nifi_test2_dev.zip"
+from tests.conftest import REF_ZIP, needs_reference
 
 
 def test_connected_components_basic(spark):
@@ -123,6 +122,7 @@ def test_velocity_parse_includes(spark):
         parse_velocity("#parse($name)")
 
 
+@needs_reference
 def test_rule_config_tracker(tmp_path):
     import shutil
 

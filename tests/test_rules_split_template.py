@@ -1,6 +1,10 @@
 """Rule compiler, detail explode, actions, split, template — incl. the
 reference's shipped demo scenario (geonames 100 rows, feature_code OR-rules,
-Group 1.xml / allCountries_100.txt) run end-to-end the Spark way."""
+Group 1.xml / allCountries_100.txt) run end-to-end the Spark way, and the
+same path over a synthetic 19-column stand-in (tests/data) where the
+reference is absent."""
+
+import os
 
 import pyspark.sql.functions as F
 import pytest
@@ -14,6 +18,9 @@ from nifi_processors_spark.operators.rules import (
 )
 from nifi_processors_spark.operators.split import join_row, split_named, split_positional
 from nifi_processors_spark.operators.template import render_json, render_template
+from tests.conftest import REF_DATA, needs_reference
+
+SYNTH_DATA = os.path.join(os.path.dirname(__file__), "data", "geonames_synth.tsv")
 
 GEONAMES_FIELDS = [
     "geonameid", "name", "asciiname", "alternatenames", "latitude", "longitude",
@@ -50,10 +57,11 @@ DEMO_SPEC = {
 def geonames(spark):
     """The reference's demo dataset, split like its flow does:
     GetFile -> SplitText -> (here) one row per DataFrame row, tab-separated."""
-    raw = spark.read.text("/root/reference/allCountries_100.txt")
+    raw = spark.read.text(REF_DATA)
     return split_named(raw, "value", "\t", GEONAMES_FIELDS)
 
 
+@needs_reference
 def test_split_named_geonames(geonames):
     assert geonames.columns == GEONAMES_FIELDS
     assert geonames.count() == 100
@@ -79,6 +87,7 @@ def test_split_literal_separator_not_regex(spark):
     assert tuple(out.first()) == ("x", "y", "z")
 
 
+@needs_reference
 def test_demo_rules_route_counts(geonames):
     """Reference demo semantics: rows pass iff feature_code is one of the
     four GRV* codes (Group 1.xml OR-subgroup)."""
@@ -94,6 +103,7 @@ def test_demo_rules_route_counts(geonames):
     assert one["rulegroups_count"] == 1 and one["rules_count"] == 4
 
 
+@needs_reference
 def test_detail_explode_and_output_types(geonames):
     ev = evaluate(geonames, DEMO_SPEC, with_details=True)
     all_rows = explode_details(ev, "all groups - all rules", ["geonameid"])
@@ -182,3 +192,25 @@ def test_render_json_escapes(spark):
     df = spark.createDataFrame([('say "hi"', 1)], "txt string, n long")
     s = render_json(df, ["txt", "n"]).first()["content"]
     assert s == '{"txt":"say \\"hi\\"","n":1}'
+
+
+def test_demo_rules_route_synthetic(spark):
+    """The demo's split -> rule -> route path over a synthetic 19-column
+    tab-separated stand-in: a row passes iff its feature_code is exactly
+    one of GRVC/GRVO/GRVP/GRVPN (case-sensitive; near misses, lower case
+    and an empty field fail)."""
+    rows = split_named(spark.read.text(SYNTH_DATA), "value", "\t", GEONAMES_FIELDS)
+    assert rows.columns == GEONAMES_FIELDS
+    ev = evaluate(rows, DEMO_SPEC, with_details=True)
+    routed = {r["geonameid"]: r["route"] for r in route(ev).collect()}
+    assert len(routed) == 12
+    assert {g for g, r in routed.items() if r == "passed"} == {
+        "9000001", "9000003", "9000004", "9000005", "9000010",
+    }
+    # detail explode: one row per (row, rule); each passing row fails the
+    # three rules naming the other codes, each failing row all four
+    d = explode_details(ev, "all groups - all rules", ["geonameid"])
+    assert d.count() == 12 * 4
+    assert d.filter(F.col("rule_failed") == 1).count() == 5 * 3 + 7 * 4
+    assert explode_details(ev, "passed groups - all rules", ["geonameid"]).count() == 5 * 4
+    assert explode_details(ev, "failed groups - all rules", ["geonameid"]).count() == 7 * 4

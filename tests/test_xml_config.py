@@ -5,7 +5,6 @@ pass/fail routing (ExecuteRuleEngine.java:330-336 load semantics;
 ExecuteRuleEngine_Example.xml flow). Plus the rowlayout.xml -> datagen
 layout round-trip (GenerateData.java:157-177)."""
 
-import os
 import textwrap
 
 import pyspark.sql.functions as F
@@ -19,9 +18,8 @@ from nifi_processors_spark.sources.xml_config import (
     parse_rowlayout,
     parse_rule_group_xml,
 )
+from tests.conftest import REF_DATA, REF_ZIP, needs_reference
 
-REF_ZIP = "/root/reference/nifi_test2_dev.zip"
-REF_DATA = "/root/reference/allCountries_100.txt"
 
 # the demo's 19 tab-separated geonames fields (verified 100x19; field list
 # per the reference screenshot's 'Field Names' property)
@@ -31,10 +29,6 @@ GEONAMES_FIELDS = [
     "admin1_code", "admin2_code", "admin3_code", "admin4_code",
     "population", "elevation", "dem", "timezone", "modification_date",
 ]
-
-needs_reference = pytest.mark.skipif(
-    not os.path.exists(REF_ZIP), reason="reference assets not present"
-)
 
 
 @needs_reference
