@@ -41,8 +41,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..plans import fsio
+from ..plans.table import bucket_of
 from .text import normalize_text
 
 
@@ -282,11 +284,9 @@ class Bm25Index:
             return self.spark.createDataFrame(
                 [], f"{query_id_col} long, {id_col} long, rank int, score double"
             )
-        tbs = sorted({r["tb"] for r in self.spark.createDataFrame(
-            [(t,) for t in terms], "term string"
-        ).select(
-            F.pmod(F.xxhash64("term"), F.lit(self.n_hash_buckets)).alias("tb")
-        ).collect()})
+        # the same pmod(xxhash64(term), n) as _postings, hashed on the driver
+        tbs = sorted({bucket_of((t,), [T.StringType()], self.n_hash_buckets)
+                      for t in terms})
         # avgdl as one exact double division of the two maintained longs —
         # identical to the inline avg() (long sum / long count)
         avgdl = m["sum_dl"] / m["n_docs"]

@@ -68,6 +68,94 @@ def bucket_expr(key: list[str], n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(*[F.col(c) for c in key]), F.lit(n_buckets)).cast("int")
 
 
+# ---------------- driver-side bucket of one key (no Spark job) ----------
+#
+# Spark's xxhash64 is XXH64 (seed 42) chained column by column: each
+# non-null value is hashed with the previous column's hash as its seed, a
+# null leaves the seed unchanged. Strings hash their UTF-8 bytes, and
+# byte/short/int as 4 little-endian bytes, long as 8 — exactly
+# XXH64.hashUnsafeBytes / hashInt / hashLong. tests/test_key_bucket.py
+# proves parity with ``bucket_expr`` over random rows.
+
+_P1, _P2, _P3, _P4, _P5 = (0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F,
+                           0x165667B19E3779F9, 0x85EBCA77C2B2AE63,
+                           0x27D4EB2F165667C5)
+_M64 = (1 << 64) - 1
+_INT_WIDTH = {T.ByteType: (4, 8), T.ShortType: (4, 16),
+              T.IntegerType: (4, 32), T.LongType: (8, 64)}
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxh64(data: bytes, seed: int) -> int:
+    """XXH64 of ``data`` as an unsigned 64-bit int."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed,
+             (seed - _P1) & _M64]
+        while i + 32 <= n:
+            for j in range(4):
+                v[j] = _round(v[j], int.from_bytes(data[i:i + 8], "little"))
+                i += 8
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12)
+             + _rotl(v[3], 18)) & _M64
+        for x in v:
+            h = ((h ^ _round(0, x)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        lane = int.from_bytes(data[i:i + 8], "little")
+        h = (_rotl(h ^ _round(0, lane), 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        lane = int.from_bytes(data[i:i + 4], "little")
+        h = (_rotl(h ^ (lane * _P1 & _M64), 23) * _P2 + _P3) & _M64
+        i += 4
+    for byte in data[i:]:
+        h = _rotl(h ^ (byte * _P5 & _M64), 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+def bucket_of(values: tuple, types: list[T.DataType], n_buckets: int) -> int | None:
+    """``bucket_expr`` for one key tuple, computed on the driver with no
+    Spark job. ``types`` are the key columns' Spark types (the hashing
+    follows the column type, not the Python value's). None when a type is
+    not supported here (anything but UTF8_BINARY string, byte, short, int
+    and long) or a value does not fit its type (a ``str`` for a long, a
+    ``bool``, an int out of range): the caller then must not prune."""
+    h = 42
+    for v, dt in zip(values, types):
+        if v is None:
+            continue
+        if type(dt) is T.StringType and dt.collation == "UTF8_BINARY":
+            if not isinstance(v, str):
+                return None
+            try:
+                data = v.encode("utf-8")
+            except UnicodeEncodeError:  # lone surrogate: no UTF-8 form
+                return None
+        elif type(dt) in _INT_WIDTH:
+            size, bits = _INT_WIDTH[type(dt)]
+            if (type(v) is not int
+                    or not -(1 << (bits - 1)) <= v < 1 << (bits - 1)):
+                return None
+            data = v.to_bytes(size, "little", signed=True)
+        else:
+            return None
+        h = _xxh64(data, h)
+    # pmod of the signed 64-bit hash: Python's % already rounds to >= 0
+    return (h - (1 << 64) if h >> 63 else h) % n_buckets
+
+
 # ---------------- per-file bloom filters (secondary-column skipping) ----
 
 # Min/max stats prune well on clustered columns; a HIGH-CARDINALITY
@@ -562,7 +650,6 @@ class IceliteTable:
         snapshot_id: int | None = None,
         buckets: list[int] | None = None,
         include_deleted: bool = False,
-        _keep: dict[str, list[dict]] | None = None,
         _resolve: bool = True,
     ) -> DataFrame:
         """Read current (or time-travel) state, remapping columns by field id.
@@ -574,7 +661,19 @@ class IceliteTable:
         tombstones older than the max event lateness bounds their growth
         at scale (see ``expire_tombstones``).
         """
-        snap = self.snapshot(snapshot_id)
+        return self._read(self.snapshot(snapshot_id), buckets, include_deleted,
+                          resolve=_resolve)
+
+    def _read(
+        self,
+        snap: dict,
+        buckets: list[int] | None = None,
+        include_deleted: bool = False,
+        keep: dict[str, list[dict]] | None = None,
+        resolve: bool = True,
+    ) -> DataFrame:
+        """``read`` of an already-loaded snapshot; ``keep`` replaces the
+        snapshot's bucket->files map (the files a scan kept)."""
         cur_fields = snap["schemas"][str(snap["schema_version"])]
         out_schema = T.StructType(
             [T.StructField(f["name"], _type_from_json(f["type"]), True) for f in cur_fields]
@@ -583,7 +682,7 @@ class IceliteTable:
         # group files by the schema version they were written under
         by_ver: dict[str, list[str]] = {}
         has_delta = False
-        for b, files in (snap["buckets"] if _keep is None else _keep).items():
+        for b, files in (snap["buckets"] if keep is None else keep).items():
             if buckets is not None and int(b) not in buckets:
                 continue
             for fe in files:
@@ -621,10 +720,10 @@ class IceliteTable:
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        if has_delta and _resolve:
+        if has_delta and resolve:
             # merge-on-read: unresolved delta rows present — resolve per-key
             # LWW now (one bucket-shuffle + sort, same shape as the merge).
-            # ``_resolve=False`` (compact) hands the raw base∪delta rows to
+            # ``resolve=False`` (compact) hands the raw base∪delta rows to
             # a caller that fuses the resolve into its own bucket shuffle.
             out = _resolve_lww(out, snap["key"], snap["n_buckets"])
         if not include_deleted:
@@ -641,13 +740,16 @@ class IceliteTable:
         live only in the buckets ``xxhash64(key) % n_buckets`` of the
         (bounded) key-combination set — a point lookup touches 1/n of the
         table, a k-key batch lookup at most k/n, before stats pruning
-        even starts. Bucket ids are computed with the very same
-        ``bucket_expr`` the writers use, on a tiny local probe DataFrame
-        (a few ms of driver-side planning), so hash parity with the data
-        layout is by construction, not by a reimplementation of xxhash64.
-        Always LWW-safe: every version of a key (base, delta, tombstone)
-        lands in the same bucket. Returns None when the key is not fully
-        pinned (or the combination set exceeds the probe bound)."""
+        even starts. Bucket ids come from ``bucket_of``, a driver-side
+        XXH64 of each combination under the key columns' snapshot types
+        (µs per key, no Spark job); tests/test_key_bucket.py proves it
+        equals the writers' ``bucket_expr``. Always LWW-safe: every
+        version of a key (base, delta, tombstone) lands in the same
+        bucket. Returns None when the key is not fully pinned, the
+        combination set exceeds the planning bound, or a literal does
+        not fit (or a type is not hashed by) ``bucket_of`` — the scan
+        then reads unpruned and the residual filter applies Spark's cast
+        semantics, so planning is never stricter than execution."""
         key = snap["key"]
         cand: dict[str, list] = {}
         for c, op, v in filters:
@@ -673,33 +775,19 @@ class IceliteTable:
             return []  # contradictory pins: provably no matching row
         if len(combos) > 1024:
             return None  # batch too large for planning; stats still prune
-        try:
-            probe = self.spark.createDataFrame(
-                combos,
-                T.StructType([
-                    T.StructField(c, _type_from_json(fields[c]["type"]), True)
-                    for c in key
-                ]),
-            )
-            rows = probe.select(
-                bucket_expr(key, snap["n_buckets"]).alias("b")
-            ).distinct().collect()
-        except Exception:
-            # filter literal does not fit the key schema (e.g. a string
-            # '42' against a long key): fall back to the unpruned
-            # read+residual path, which handles it via cast semantics —
-            # planning must never be stricter than execution (ADVICE r5)
-            return None
-        return sorted(int(r["b"]) for r in rows)
+        types = [_type_from_json(fields[c]["type"]) for c in key]
+        buckets = {bucket_of(combo, types, snap["n_buckets"]) for combo in combos}
+        return None if None in buckets else sorted(buckets)
 
     def _prune(self, snap: dict, filters: list[tuple[str, str, Any]]
                ) -> tuple[dict[str, list[dict]], dict]:
         """Manifest-stats file pruning for a conjunction of simple
         predicates. Returns (kept bucket->files map, pruning report).
 
-        When the predicate pins the full primary key with equality, the
-        candidate set first collapses to the single hash bucket the key
-        can live in (``_key_bucket``); stats pruning then runs within it.
+        When the predicate pins the full primary key with equality (or
+        IN lists), the candidate set first collapses to the hash buckets
+        the keys can live in (``_key_buckets``, hashed on the driver by
+        ``bucket_of``); stats pruning then runs within them.
 
         LWW-safety rule: in a bucket carrying DELTA files, per-key
         resolution spans files, so dropping one file could surface a stale
@@ -790,9 +878,12 @@ class IceliteTable:
         fraction of files, not the table — driver-side planning is
         O(files-in-manifest) dict work, no I/O). A predicate that pins the
         full key with equality additionally collapses to the ONE hash
-        bucket the key can occupy (``_key_bucket``) — the point-lookup
-        path reads 1/n_buckets of the manifest's files at most, before
-        stats pruning. The full predicate is
+        bucket the key can occupy (``_key_buckets``, computed on the driver
+        with no Spark job) — the point-lookup path reads 1/n_buckets of the
+        manifest's files at most, before stats pruning, and a CoW point
+        lookup runs a single Spark job (the collect). The snapshot is
+        loaded once: pruning and the read see the same manifest even if a
+        commit lands in between. The full predicate is
         ALWAYS applied residually to the surviving files, so pruning can
         only skip work, never change results; files without stats (old
         snapshots, remote writers) are simply read.
@@ -806,8 +897,7 @@ class IceliteTable:
                                  f"list/tuple/set, got {type(v).__name__}")
         snap = self.snapshot(snapshot_id)
         kept, _ = self._prune(snap, filters)
-        df = self.read(snapshot_id=snapshot_id, include_deleted=include_deleted,
-                       _keep=kept)
+        df = self._read(snap, include_deleted=include_deleted, keep=kept)
         pred = F.lit(True)
         for c, op, v in filters:
             col = F.col(c)
@@ -860,8 +950,7 @@ class IceliteTable:
         snap = self.snapshot(snapshot_id)
         meta_rows, residual = self._count_plan(snap)
         if residual:
-            meta_rows += self.read(snapshot_id=snap["snapshot_id"],
-                                   buckets=residual).count()
+            meta_rows += self._read(snap, buckets=residual).count()
         return meta_rows
 
     def count_report(self, snapshot_id: int | None = None) -> dict:
