@@ -6,7 +6,6 @@ be measured per-query with the noop sink (guide §1.4), labeled jobs
 Usage:
   python bench_extra.py time  [query ...]   # best-of-N noop wall per query
   python bench_extra.py plans [query ...]   # write plans/r06/<q>_<tag>.txt
-  python bench_extra.py apply               # CDC apply phase breakdown
 
 Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS,
      BENCH_EXTRA_TRIALS (default 3), BENCH_EXTRA_TAG (plans suffix,
@@ -84,39 +83,6 @@ def cmd_plans(names: list[str]) -> None:
     spark.stop()
 
 
-def cmd_apply() -> None:
-    """Phase breakdown of one ChangeApplier.run() — not the headline
-    methodology (bench.py owns that); this isolates where epoch wall goes."""
-    import shutil
-
-    from nifi_processors_spark.operators.apply import ChangeApplier
-    from nifi_processors_spark.sources.genlog import GenLogConfig, write_change_log
-
-    n_events = int(os.environ.get("BENCH_EXTRA_EVENTS", "1000000"))
-    mode = os.environ.get("BENCH_EXTRA_MODE", "cow")
-    spark = _spark()
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 8)
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    work = tempfile.mkdtemp(prefix="bx_apply_", dir=shm)
-    cfg = GenLogConfig(n_events=n_events, n_epochs=4, content_blocks_max=8,
-                       n_keys=max(n_events // 4, 64))
-    write_change_log(spark, cfg, f"{work}/changelog")
-    ap = ChangeApplier(spark, f"{work}/table", f"{work}/changelog",
-                       f"{work}/state", n_buckets=max(cpus * 2, 16),
-                       merge_mode=mode,
-                       compact_every=4 if mode == "mor" else None)
-    t0 = time.monotonic()
-    recs = ap.run()
-    wall = time.monotonic() - t0
-    print(json.dumps({
-        "mode": mode, "events": n_events, "wall_sec": round(wall, 2),
-        "events_per_sec": round(n_events / wall, 1),
-        "epoch_wall_ms": [r["wall_ms"] for r in recs],
-    }))
-    shutil.rmtree(work, ignore_errors=True)
-    spark.stop()
-
-
 if __name__ == "__main__":
     cmd = sys.argv[1] if len(sys.argv) > 1 else "time"
     names = sys.argv[2:] or DEFAULT_QUERIES
@@ -124,7 +90,5 @@ if __name__ == "__main__":
         cmd_time(names)
     elif cmd == "plans":
         cmd_plans(names)
-    elif cmd == "apply":
-        cmd_apply()
     else:
         raise SystemExit(f"unknown command {cmd!r}")

@@ -5,45 +5,45 @@ This is the Spark-native replacement for the reference's flagship flow
 (GetFile -> SplitText -> ExecuteRuleEngine -> RouteOnAttribute -> PutFile,
 reference: ExecuteRuleEngine_Example.xml:18-23): instead of a per-record
 interpreted loop (ExecuteRuleEngine.java:438-565), each *epoch* of the
-change log is applied as one declarative DataFrame plan —
+change log is applied as one declarative DataFrame plan, built by the
+named phases of ``ChangeApplier.apply_batch_df``:
 
-    read epoch parquet (predicate/column pruning free via Catalyst)
-      -> skinny per-bucket stats job (key/op columns ONLY — the payload
-         is never read here)
-      -> OPTIMISTIC typed parse with the registry's schema (+ historical
-         old names, so late-arriving pre-rename rows keep their values)
-      -> window LWW dedup on (repo, path) by (commit_seq, event_seq)
-      -> copy-on-write bucketed MERGE carrying a df.observe() drift
-         aggregation (schema_of_variant_agg over EVERY row — a v2 payload
-         appearing mid-epoch is never silently dropped, and the payload
-         is read+parsed exactly ONCE per epoch)
-      -> drift observed? icelite ALTER, then registry persist (in that
-         order: a crash between them leaves the registry behind the
-         table, which the tolerant diff repairs on replay — never ahead),
-         then an idempotent RE-merge with the evolved schema (the LWW
-         tie-break prefers the change row, so the stale first merge is
-         overwritten byte-exactly)
-      -> epoch commit marker (exactly-once) + lineage/metrics record
+    stats       skinny per-bucket aggregation of the key/op/seq columns
+                (never the payload), run beside the merge unless the guard
+                or a table's bootstrap needs it first
+    guard       tables that ran tombstone expiry: skip a marker-loss replay
+                wholly below the watermark, refuse partially stale data
+    stage       ONE try_parse_json per row behind a Generate barrier; the
+                merge, the drift aggregates, the re-merge and the
+                quarantine all derive from this frame, so every executed
+                plan parses a payload once
+    merge       one select aligns the typed fields (registry schema plus
+                historical pre-rename names, coalesced) to the table's
+                columns -> LWW bucket MERGE (CoW) or delta append (MOR);
+                the drift aggregates (schema_of_variant_agg over EVERY row)
+                ride it as an observation, or, streaming, one extra job
+    evolve      drift? icelite ALTER, then registry persist (a crash between
+                them leaves the registry behind the table, which the
+                tolerant diff repairs on replay — never ahead), then an
+                idempotent re-merge with the evolved schema (the LWW
+                tie-break prefers the change row)
+    quarantine  bad-key and malformed rows, as read
+    compact     MOR, every ``compact_every`` epochs: the delta buckets
+    record      lineage/metrics record, then the exactly-once marker
 
-Scale notes: an epoch costs exactly TWO Spark jobs on the drift-free
-path — the skinny stats aggregation (column-pruned to the key/op
-columns; at 2 KB payloads that is ~1-2%% of the epoch's bytes) and the
-merge itself (window over state ∪ events, one key shuffle,
-bucket-clustered write, drift detection riding as an observation).
-Epochs with drift (rare: schema changes) or corrupt rows pay one extra
-merge / quarantine write. Within-epoch dedup is folded into the merge
-window. Only affected buckets of the target are read/rewritten.
-Everything stays JVM-side (no Python row loop anywhere). Hot-repo skew
-cannot stall the window because the partition key is the full
-(repo, path); the merge spreads buckets evenly by hash.
+The table snapshot and the schema registry are loaded once per epoch and
+reloaded only after an ALTER or a registry commit. Only affected buckets
+of the target are read/rewritten, and nothing runs a Python row loop.
 """
 
 from __future__ import annotations
 
 import time
+from concurrent.futures import Future, ThreadPoolExecutor
+from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -53,16 +53,56 @@ from ..plans.checkpoint import CheckpointLog
 from ..plans.registry import (
     SchemaRegistry,
     detect_payload_schema,
+    diff_schemas,
     fields_from_variant_schema,
     merge_field_sets,
-    to_struct,
     _SPARK_TYPE,
 )
-from ..plans.table import IceliteTable, bucket_expr
-from .envelope import VARIANT_COL, malformed_json, parse_envelope
+from ..plans.table import IceliteTable, _type_from_json, bucket_expr
+from .envelope import MALFORMED_COL, VARIANT_COL, payload_field, stage_payload
 
 ENVELOPE_KEY = ["repo", "path"]
-ENVELOPE_COLS = ["repo", "path", "op", "commit", "commit_seq", "event_seq"]
+
+
+def _badkey() -> Column:
+    """A row no key can be derived for (or without an op): quarantined."""
+    return F.col("repo").isNull() | F.col("path").isNull() | F.col("op").isNull()
+
+
+def _affected(per_bucket: list[Row]) -> list[int]:
+    """Buckets holding at least one keyed row."""
+    return sorted(int(r["_b"]) for r in per_bucket if r["rows"] > r["badkey"])
+
+
+def _rename_resolver(versions: list[dict]) -> dict[str, str]:
+    """Cumulative old-name -> current-name map across registry versions."""
+    resolve: dict[str, str] = {}
+    for ver in versions:
+        for old, new in ver.get("renames", {}).items():
+            # re-point any chain ending at `old`
+            for k, v in list(resolve.items()):
+                if v == old:
+                    resolve[k] = new
+            resolve[old] = new
+    return resolve
+
+
+@dataclass
+class _Epoch:
+    """What the phases of one apply hand on to each other."""
+
+    epoch: int
+    key: int | str  # namespaces quarantine dir, metrics file and marker
+    input_files: list[str]
+    t0: float
+    table: IceliteTable | None
+    snap: dict | None  # loaded once; reloaded after an ALTER / registry commit
+    versions: list[dict]  # registry versions, same rule
+    stats: Future | None = None
+    affected: list[int] | None = None  # known before the merge, or None
+    sid: int | None = None  # snapshot the epoch leaves the table at
+    affected_buckets: int = 0  # as the last merge reports it
+    n_malformed: int = 0
 
 
 class ChangeApplier:
@@ -187,76 +227,15 @@ class ChangeApplier:
             self.spark, self.table_path, schema, key=ENVELOPE_KEY, n_buckets=self.n_buckets
         )
 
-    def _rename_resolver(self) -> dict[str, str]:
-        """Cumulative old-name -> current-name map across registry versions."""
-        resolve: dict[str, str] = {}
-        cur = self.registry._load()["versions"]
-        for ver in cur:
-            for old, new in ver.get("renames", {}).items():
-                # re-point any chain ending at `old`
-                for k, v in list(resolve.items()):
-                    if v == old:
-                        resolve[k] = new
-                resolve[old] = new
-        return resolve
-
-    def _parse_plan(self) -> tuple[list, list, dict[str, str]]:
-        """(registry fields, parse fields, rename resolver). Parse fields
-        include every HISTORICAL pre-rename name (typed as its current
-        target), so a late-arriving event still carrying an old field name
-        parses into a real column and coalesces into the current one —
-        instead of silently losing its value to an unknown-key drop."""
-        cur = self.registry.current()
-        resolve = self._rename_resolver()
-        reg_fields = [(f["name"], f["type"]) for f in cur["fields"]] if cur else []
-        type_of = dict(reg_fields)
-        aliases = [
-            (old, type_of.get(new, "string"))
-            for old, new in resolve.items()
-            if old not in type_of
-        ]
-        return reg_fields, reg_fields + aliases, resolve
-
-    def _build_changes(self, raw: DataFrame, parse_fields: list, resolve: dict[str, str],
-                       table: IceliteTable) -> DataFrame:
-        """Typed envelope parse -> rename-chain resolution (a mid-epoch
-        rename means one epoch carries BOTH names: v1 rows populate the
-        old column, v2 rows the new one — coalesce so no row loses its
-        value) -> align to current table columns (null for columns this
-        epoch lacks) -> drop corrupt / null-key rows."""
-        parsed = parse_envelope(raw, to_struct(parse_fields))
-        for old, new in resolve.items():
-            if old in parsed.columns and new not in parsed.columns:
-                parsed = parsed.withColumnRenamed(old, new)
-            elif old in parsed.columns and new in parsed.columns:
-                parsed = parsed.withColumn(new, F.coalesce(F.col(new), F.col(old))).drop(old)
-        snap = table.snapshot()
-        data_cols = table.field_names(snap)
-        sel = []
-        for c in data_cols:
-            if c in parsed.columns:
-                sel.append(F.col(c))
-            else:
-                ftype = next(
-                    f["type"] for f in snap["schemas"][str(snap["schema_version"])]
-                    if f["name"] == c
-                )
-                from ..plans.table import _type_from_json
-                sel.append(F.lit(None).cast(_type_from_json(ftype)).alias(c))
-        events = parsed.select(*sel, "op", "commit_seq", "event_seq", "_corrupt")
-        events = events.withColumn(
-            "_corrupt",
-            F.col("_corrupt") | F.col("repo").isNull() | F.col("path").isNull()
-            | F.col("op").isNull(),
-        )
-        return events.filter(~F.col("_corrupt")).drop("_corrupt")
-
+    def _registry_versions(self) -> list[dict]:
+        return self.registry._load()["versions"]
 
     # ------------- the apply -------------
 
     def apply_epoch(self, epoch: int, crash: Callable[[str, int], None] | None = None) -> dict:
         """Apply one changelog epoch. ``crash(point, epoch)`` is a test hook
-        invoked at 'after_merge' (before the marker) for crash-resume tests."""
+        invoked at 'after_alter' and 'after_merge' (before the marker) for
+        crash-resume tests."""
         input_files = sorted(
             fsio.join(self._epoch_dir(epoch), f)
             for f in fsio.listdir(self._epoch_dir(epoch))
@@ -280,301 +259,292 @@ class ChangeApplier:
         collide with batch changelog epochs).
 
         ``observe_metrics``: when True (batch path), drift detection rides
-        the merge job as a ``df.observe`` — one scan of the payload, zero
-        extra jobs. The streaming front-end passes False: blocking on
-        ``Observation.get`` from inside a foreachBatch callback deadlocks
-        the query (the QueryExecutionListener event that fulfils the
-        observation is never delivered to a waiter on the callback thread
-        — reproduced deterministically on Spark 4.1), so streaming pays
-        one skinny extra aggregation job over the micro-batch instead."""
+        the merge job as a ``df.observe`` — zero extra jobs. The streaming
+        front-end passes False: blocking on ``Observation.get`` from inside
+        a foreachBatch callback deadlocks the query (the
+        QueryExecutionListener event that fulfils the observation is never
+        delivered to a waiter on the callback thread — reproduced
+        deterministically on Spark 4.1), so streaming pays one skinny extra
+        aggregation job over the staged micro-batch instead."""
         t0 = time.monotonic()
-        input_files = input_files or []
+        table = self._table()
+        snap = table.snapshot() if table is not None else None
+        ep = _Epoch(epoch, epoch if marker is None else marker, input_files or [], t0,
+                    table, snap, self._registry_versions(),
+                    sid=snap["snapshot_id"] if snap is not None else None)
+        wm = snap.get("tombstone_watermark") if snap is not None else None
+        # the guard and a table's bootstrap need the stats first; otherwise
+        # the stats job runs in the background
+        pool = ThreadPoolExecutor(max_workers=1) if ep.versions and wm is None else None
+        try:
+            self._stats(raw, ep, pool)
+            if wm is not None and self._guard(ep, wm):
+                return self._record(ep, [], stale_wm=wm)
+            if not ep.versions:
+                self._bootstrap(raw, ep)
+            staged = self._stage(raw)
+            observed, drift = self._drift_probe(staged, observe_metrics)
+            if self._merge(ep, observed, "merge") and self._evolve(ep, drift(), crash):
+                self._merge(ep, staged, "merge_evolved")
+            per_bucket = ep.stats.result()
+        finally:
+            if pool is not None:
+                # always released — a merge/registry failure must not leak a
+                # worker thread per failed epoch; a not-yet-started collect
+                # is cancelled outright
+                pool.shutdown(wait=False, cancel_futures=True)
+        self._quarantine(ep, staged, raw.columns, per_bucket)
+        self._compact(ep)
+        if crash is not None:
+            crash("after_merge", epoch)
+        return self._record(ep, per_bucket)
 
-        existing = self._table()
-        snap0 = existing.snapshot() if existing is not None else None
-        nb = snap0["n_buckets"] if snap0 is not None else self.n_buckets
-
-        # Staleness guard (only on tables that ever ran tombstone expiry):
-        # once a masking tombstone is expired, merging an event OLDER than
-        # the recorded watermark could resurrect a deleted row. An epoch
-        # wholly below the watermark can only be a marker-loss replay of an
-        # already-applied epoch (the expiry contract says no NEW event that
-        # old can arrive) -> skip it and re-commit its marker (self-heal,
-        # byte-identical state). A PARTIALLY stale epoch is a contract
-        # violation -> refuse loudly instead of silently diverging. Costs
-        # one skinny (commit_seq-only) pre-scan, paid only when a watermark
-        # exists; the stats job cannot supply this because in MOR mode it
-        # intentionally runs concurrently with the merge.
-        wm = snap0.get("tombstone_watermark") if snap0 is not None else None
-        if wm is not None:
-            mm = raw.filter(
-                F.col("repo").isNotNull() & F.col("path").isNotNull()
-                & F.col("op").isNotNull()
-            ).agg(
-                F.min("commit_seq").alias("lo"), F.max("commit_seq").alias("hi")
-            ).first()
-            if mm["hi"] is not None and mm["hi"] < wm:
-                key = epoch if marker is None else marker
-                # Corroborate the replay hypothesis before dropping the
-                # epoch: metrics are written BEFORE the marker, so a true
-                # marker-loss replay always left a metrics record for this
-                # key. An all-late epoch with NO such record was never
-                # applied — skipping it would silently discard new data,
-                # so refuse loudly like the partial-stale case (ADVICE r3).
-                if not self.metrics.has(key):
-                    raise RuntimeError(
-                        f"epoch {epoch}: every event is below the "
-                        f"tombstone-expiry watermark {wm} and no prior "
-                        f"metrics record exists for key {key!r} — this is "
-                        "genuinely new all-late data, not a marker-loss "
-                        "replay, and applying it could resurrect deleted "
-                        "rows. Raise tombstone_lateness above the stream's "
-                        "real disorder, or rebuild the table from the full "
-                        "changelog. (Appliers with collect_metrics=False "
-                        "cannot corroborate replays and always refuse.)"
-                    )
-                rec = {
-                    "epoch": epoch, "marker": str(key),
-                    "snapshot_id": snap0["snapshot_id"], "rows_in": 0,
-                    "rows_corrupt": 0, "affected_buckets": 0,
-                    "wall_ms": int((time.monotonic() - t0) * 1000),
-                    "schema_version": (self.registry.current() or {}).get("version", 0),
-                    "input_files": input_files, "rows_upserted": 0,
-                    "rows_deleted": 0, "partitions": [],
-                    "skipped_stale": True, "tombstone_watermark": wm,
-                    "max_commit_seq": self._max_commit_seq,
-                }
-                if self.collect_metrics:
-                    self.metrics.append(rec)
-                self.checkpoints.commit(key, {"snapshot_id": snap0["snapshot_id"],
-                                              "skipped_stale": True})
-                return rec
-            if mm["lo"] is not None and mm["lo"] < wm:
-                raise RuntimeError(
-                    f"epoch {epoch}: contains events with commit_seq "
-                    f"{mm['lo']} < tombstone-expiry watermark {wm}; applying "
-                    "them could resurrect deleted rows. Raise "
-                    "tombstone_lateness above the stream's real disorder, "
-                    "or rebuild the table from the full changelog."
-                )
-
-        # 1. skinny per-bucket stats: key/op columns ONLY — the (big)
-        #    payload column is never read in this job; its single read is
-        #    the merge below. Deliberately NOT cached (caching wide data to
-        #    save a re-scan measured 2.5x slower than re-scanning).
-        is_badkey = (
-            F.col("repo").isNull() | F.col("path").isNull() | F.col("op").isNull()
-        )
+    def _stats(self, raw: DataFrame, ep: _Epoch, pool: ThreadPoolExecutor | None) -> None:
+        """Phase: skinny per-bucket stats — key/op/seq columns ONLY; the
+        (big) payload column is never read in this job, its one read is the
+        merge. Deliberately NOT cached (caching wide data to save a re-scan
+        measured 2.5x slower than re-scanning). With a ``pool`` the job runs
+        in the background: merge-on-read never READS the table, so its
+        merge runs beside it; copy-on-write needs the affected buckets only
+        at merge EXECUTION, so all of its plan construction overlaps the
+        job. Without one (guard, bootstrap) the stats are known up front."""
+        nb = ep.snap["n_buckets"] if ep.snap is not None else self.n_buckets
+        badkey = _badkey()
+        keyed_seq = F.when(~badkey, F.col("commit_seq"))
         stats_df = (
             raw.withColumn("_b", bucket_expr(ENVELOPE_KEY, nb))
             .groupBy("_b")
             .agg(
                 F.count("*").alias("rows"),
-                F.sum(F.when((F.col("op") == "D") & ~is_badkey, 1).otherwise(0)).alias("dels"),
-                F.sum(is_badkey.cast("int")).alias("badkey"),
-                # high-water mark feeding the tombstone-expiry watermark
-                F.max(F.when(~is_badkey, F.col("commit_seq"))).alias("maxc"),
+                F.sum(F.when((F.col("op") == "D") & ~badkey, 1).otherwise(0)).alias("dels"),
+                F.sum(badkey.cast("int")).alias("badkey"),
+                # the guard's bounds; maxc also feeds the expiry watermark
+                F.min(keyed_seq).alias("minc"),
+                F.max(keyed_seq).alias("maxc"),
             )
         )
-        # Merge-on-read never READS the table, so the affected-bucket set
-        # isn't needed before the merge — run the stats job CONCURRENTLY
-        # with it (the tasks interleave; the epoch's wall is the merge
-        # alone). Copy-on-write needs the affected list only at merge
-        # EXECUTION time, so it too submits the stats job up front and
-        # resolves the future right before calling merge — the whole
-        # driver-side plan construction (registry read, envelope parse
-        # plan, change alignment) overlaps the stats job instead of
-        # waiting behind it (r06; guide §2.6 "overlap independent jobs").
-        stats_fut = pool = None
-        per_bucket = affected = None
-        concurrent_stats = self.registry.current() is not None
-        if concurrent_stats:
-            from concurrent.futures import ThreadPoolExecutor
+        if pool is not None:
+            ep.stats = pool.submit(stats_df.collect)
+            return
+        ep.stats = Future()
+        ep.stats.set_result(stats_df.collect())
+        ep.affected = _affected(ep.stats.result())
 
-            pool = ThreadPoolExecutor(max_workers=1)
-            stats_fut = pool.submit(stats_df.collect)
-        else:
-            per_bucket = stats_df.collect()
-            affected = sorted(int(r["_b"]) for r in per_bucket if r["rows"] > r["badkey"])
-
-        try:
-            # 2. bootstrap: a table's FIRST epoch pays one extra detection job
-            #    so the table is born with the right payload columns (instead
-            #    of every new table's epoch 0 taking the drift re-merge path)
-            if self.registry.current() is None:
-                boot_fields = detect_payload_schema(raw)
-                self._ensure_table(boot_fields)
-                self.registry.register(boot_fields, epoch)
-            table = self._ensure_table([])
-
-            merge_fn = table.merge if self.merge_mode == "cow" else table.merge_mor
-            n_malformed = 0
-            if affected is None or affected:
-                # 3. OPTIMISTIC parse with the registry schema; drift detection
-                #    rides the merge job as an observation (schema_of_variant_agg
-                #    over every row — mid-epoch drift is never missed). The
-                #    payload is parsed ONCE per row (r06): ``_pv`` stages the
-                #    variant as a column, the corrupt flag / drift schema /
-                #    malformed count are derived from it inside the observe,
-                #    and parse_envelope extracts the typed fields from the
-                #    SAME column — the former shape paid three parses per row
-                #    (from_json + try_parse_json in the corrupt test +
-                #    parse_json in the schema agg), ~35% of the merge stage
-                #    at 1M events (bench_extra).
-                reg_fields, parse_fields, resolve = self._parse_plan()
-                raw_v = raw.withColumn(
-                    VARIANT_COL, F.try_parse_json(F.col("payload_json"))
+    def _guard(self, ep: _Epoch, wm: int) -> bool:
+        """Phase: staleness guard, on tables that ever ran tombstone expiry.
+        Once a masking tombstone is expired, merging an event OLDER than
+        the recorded watermark ``wm`` could resurrect a deleted row. An
+        epoch wholly below it can only be a marker-loss replay of an
+        already-applied epoch (the expiry contract says no NEW event that
+        old can arrive) -> True: skip it and re-commit its marker
+        (self-heal, byte-identical state). A PARTIALLY stale epoch is a
+        contract violation -> refuse loudly instead of silently diverging."""
+        rows = ep.stats.result()
+        lo = min((r["minc"] for r in rows if r["minc"] is not None), default=None)
+        hi = max((r["maxc"] for r in rows if r["maxc"] is not None), default=None)
+        if hi is not None and hi < wm:
+            # Corroborate the replay hypothesis before dropping the epoch:
+            # metrics are written BEFORE the marker, so a true marker-loss
+            # replay always left a metrics record for this key. An all-late
+            # epoch with NO such record was never applied — skipping it
+            # would silently discard new data, so refuse loudly.
+            if not self.metrics.has(ep.key):
+                raise RuntimeError(
+                    f"epoch {ep.epoch}: every event is below the "
+                    f"tombstone-expiry watermark {wm} and no prior "
+                    f"metrics record exists for key {ep.key!r} — this is "
+                    "genuinely new all-late data, not a marker-loss "
+                    "replay, and applying it could resurrect deleted "
+                    "rows. Raise tombstone_lateness above the stream's "
+                    "real disorder, or rebuild the table from the full "
+                    "changelog. (Appliers with collect_metrics=False "
+                    "cannot corroborate replays and always refuse.)"
                 )
-                head = F.substring(F.ltrim(F.col("payload_json")), 1, 1)
-                is_corrupt = F.col("payload_json").isNotNull() & (
-                    (head != "{") | F.col(VARIANT_COL).isNull()
-                )
-                drift_aggs = [
-                    F.schema_of_variant_agg(
-                        F.when(~(is_corrupt | is_badkey), F.col(VARIANT_COL))
-                    ).alias("vschema"),
-                    # badkey and malformed must PARTITION the corrupt set —
-                    # a row that is both null-keyed and malformed counts
-                    # once (as badkey), or rows_upserted double-subtracts
-                    F.sum((is_corrupt & ~is_badkey).cast("int")).alias("malformed"),
-                ]
-                obs = None
-                raw_obs = raw_v
-                if observe_metrics:
-                    obs = Observation()
-                    raw_obs = raw_v.observe(obs, *drift_aggs)
-                changes = self._build_changes(raw_obs, parse_fields, resolve, table)
-                if self.merge_mode == "cow" and stats_fut is not None:
-                    # resolve the concurrent stats now — the CoW read scope
-                    # needs the affected list; all the plan construction
-                    # above ran while the stats job executed
-                    per_bucket = stats_fut.result()
-                    stats_fut = None
-                    affected = sorted(
-                        int(r["_b"]) for r in per_bucket if r["rows"] > r["badkey"]
-                    )
-            mergeable = affected is None or bool(affected)
-            if mergeable:
-                new_sid, mstats = merge_fn(
-                    changes,
-                    lineage={"op": "merge", "mode": self.merge_mode, "epoch": epoch,
-                             "input_files": input_files},
-                    affected=affected,
-                )
-                got = obs.get if obs is not None else raw_v.agg(*drift_aggs).first()
-                n_malformed = int(got["malformed"] or 0)
-                epoch_fields = fields_from_variant_schema(got["vschema"])
-                if resolve:  # late rows may still carry already-renamed names
-                    epoch_fields = merge_field_sets(
-                        [[(resolve.get(n, n), t) for n, t in epoch_fields]]
-                    )
+            return True
+        if lo is not None and lo < wm:
+            raise RuntimeError(
+                f"epoch {ep.epoch}: contains events with commit_seq "
+                f"{lo} < tombstone-expiry watermark {wm}; applying "
+                "them could resurrect deleted rows. Raise "
+                "tombstone_lateness above the stream's real disorder, "
+                "or rebuild the table from the full changelog."
+            )
+        return False
 
-                # 4. drift? ALTER first, registry persist second (a crash
-                #    between them leaves the registry behind the table, which
-                #    the tolerant filter repairs on replay — never ahead), then
-                #    an idempotent re-merge: the LWW tie-break prefers the
-                #    change row, so the stale first merge is overwritten exactly.
-                cur, renames, adds = self.registry.diff(epoch_fields)
-                if renames or adds:
-                    tcols = set(table.field_names())
-                    eff_renames = {o: n for o, n in renames.items()
-                                   if o in tcols and n not in tcols}
-                    eff_adds = [(n, ty) for n, ty in adds if n not in tcols]
-                    if eff_renames or eff_adds:
-                        table.alter(
-                            eff_renames,
-                            [(n, _SPARK_TYPE[ty]) for n, ty in eff_adds],
-                            lineage={"op": "alter", "epoch": epoch, "renames": eff_renames,
-                                     "adds": [n for n, _ in eff_adds]},
-                        )
-                        if crash is not None:
-                            crash("after_alter", epoch)
-                    ver = self.registry.commit_version(renames, adds, epoch)
-                    _, parse_fields, resolve = self._parse_plan()
-                    changes = self._build_changes(raw, parse_fields, resolve, table)
-                    new_sid, mstats = merge_fn(
-                        changes,
-                        lineage={"op": "merge_evolved", "mode": self.merge_mode,
-                                 "epoch": epoch, "input_files": input_files},
-                        affected=affected,
-                    )
-                else:
-                    ver = cur or self.registry.current()
-            else:  # nothing mergeable (empty epoch, or all rows bad-keyed)
-                new_sid = table.snapshot()["snapshot_id"]
-                mstats = {"affected_buckets": 0}
-                ver = self.registry.current()
+    def _bootstrap(self, raw: DataFrame, ep: _Epoch) -> None:
+        """A table's FIRST epoch pays one extra detection job so the table
+        is born with the right payload columns (instead of every new
+        table's epoch 0 taking the drift re-merge path)."""
+        fields = detect_payload_schema(raw)
+        ep.table = self._ensure_table(fields)
+        self.registry.register(fields, ep.epoch)
+        ep.snap, ep.versions = ep.table.snapshot(), self._registry_versions()
+        ep.sid = ep.snap["snapshot_id"]
 
-            if stats_fut is not None:
-                per_bucket = stats_fut.result()
-        finally:
-            if pool is not None:
-                # always released — a merge/registry failure must not leak a
-                # worker thread per failed epoch (round-2 advice); a not-yet-
-                # started collect is cancelled outright
-                pool.shutdown(wait=False, cancel_futures=True)
-        # one key namespaces EVERYTHING an apply writes: quarantine dir,
-        # metrics file, checkpoint marker. Streaming micro-batches pass a
-        # namespaced marker ('stream_<id>_<batch>'); without threading it
-        # through here, stream batch N would clobber batch epoch N's
-        # quarantined rows and metrics record (round-2 advice).
-        key = epoch if marker is None else marker
+    @staticmethod
+    def _stage(raw: DataFrame) -> DataFrame:
+        """Phase: the epoch's one payload parse (``stage_payload``) plus the
+        bad-key flag; every later phase derives from this frame."""
+        return stage_payload(raw).withColumn("_badkey", _badkey())
+
+    @staticmethod
+    def _drift_probe(staged: DataFrame, observe: bool) -> tuple[DataFrame, Callable[[], Row]]:
+        """(frame the first merge runs on, getter of the drift aggregates):
+        the payload schema over every clean row (``schema_of_variant_agg``
+        — mid-epoch drift is never missed) and the malformed count. Bad-key
+        and malformed rows PARTITION the corrupt set — a row that is both
+        counts once (as bad-key), or rows_upserted would double-subtract."""
+        corrupt = F.col("_badkey") | F.col(MALFORMED_COL)
+        aggs = [
+            F.schema_of_variant_agg(F.when(~corrupt, F.col(VARIANT_COL))).alias("vschema"),
+            F.sum((F.col(MALFORMED_COL) & ~F.col("_badkey")).cast("int")).alias("malformed"),
+        ]
+        if not observe:
+            return staged, lambda: staged.agg(*aggs).first()
+        obs = Observation()
+        return staged.observe(obs, *aggs), lambda: obs.get
+
+    def _changes(self, staged: DataFrame, ep: _Epoch) -> DataFrame:
+        """The merge change-set in ONE select over the staged frame: the
+        typed payload fields — the registry schema plus every HISTORICAL
+        pre-rename name, so a late event still carrying an old name keeps
+        its value, and a mid-epoch rename (v1 rows fill the old name, v2
+        rows the new one) coalesces into the current column — aligned to
+        the snapshot's columns (null for columns this epoch lacks), minus
+        bad-key and malformed rows."""
+        resolve = _rename_resolver(ep.versions)
+        reg = {f["name"]: f["type"] for f in ep.versions[-1]["fields"]}
+        # a historical name is typed as its current target
+        typed = {**{old: reg.get(new, "string") for old, new in resolve.items()}, **reg}
+        cols = {c: F.col(c) for c in staged.columns}
+        cols.update({n: payload_field(n, ty) for n, ty in typed.items()})
+        for old, new in resolve.items():
+            if old in cols:
+                val = cols.pop(old)
+                cols[new] = F.coalesce(cols[new], val) if new in cols else val
+        fields = ep.snap["schemas"][str(ep.snap["schema_version"])]
+        return staged.filter(~F.col("_badkey") & ~F.col(MALFORMED_COL)).select(
+            *[(cols[f["name"]] if f["name"] in cols
+               else F.lit(None).cast(_type_from_json(f["type"]))).alias(f["name"])
+              for f in fields],
+            "op", "commit_seq", "event_seq",
+        )
+
+    def _merge(self, ep: _Epoch, staged: DataFrame, op: str) -> bool:
+        """Phase: merge the change-set into the snapshot the epoch holds.
+        False when nothing is mergeable (empty epoch, or every row
+        bad-keyed)."""
+        changes = self._changes(staged, ep)
+        if ep.affected is None and self.merge_mode == "cow":
+            # the CoW read scope needs the affected buckets: resolve the
+            # stats now — the plan construction above ran beside the job
+            ep.affected = _affected(ep.stats.result())
+        if ep.affected == []:
+            return False
+        merge = ep.table.merge if self.merge_mode == "cow" else ep.table.merge_mor
+        ep.sid, mstats = merge(
+            changes,
+            lineage={"op": op, "mode": self.merge_mode, "epoch": ep.epoch,
+                     "input_files": ep.input_files},
+            affected=ep.affected,
+            snap=ep.snap,
+        )
+        ep.affected_buckets = mstats["affected_buckets"]
+        return True
+
+    def _evolve(self, ep: _Epoch, drift: Row, crash: Callable[[str, int], None] | None) -> bool:
+        """Phase: diff the epoch's payload schema against the registry. On
+        drift: ALTER first, registry persist second (a crash between them
+        leaves the registry behind the table, which the tolerant filter
+        repairs on replay — never ahead), reload both, and return True so
+        the caller re-merges with the evolved schema."""
+        ep.n_malformed = int(drift["malformed"] or 0)
+        fields = fields_from_variant_schema(drift["vschema"])
+        resolve = _rename_resolver(ep.versions)
+        if resolve:  # late rows may still carry already-renamed names
+            fields = merge_field_sets([[(resolve.get(n, n), t) for n, t in fields]])
+        registered = [(f["name"], f["type"]) for f in ep.versions[-1]["fields"]]
+        renames, adds = diff_schemas(registered, fields, self.registry.rename_hints)
+        if not (renames or adds):
+            return False
+        tcols = set(ep.table.field_names(ep.snap))
+        eff_renames = {o: n for o, n in renames.items() if o in tcols and n not in tcols}
+        eff_adds = [(n, ty) for n, ty in adds if n not in tcols]
+        if eff_renames or eff_adds:
+            ep.table.alter(
+                eff_renames,
+                [(n, _SPARK_TYPE[ty]) for n, ty in eff_adds],
+                lineage={"op": "alter", "epoch": ep.epoch, "renames": eff_renames,
+                         "adds": [n for n, _ in eff_adds]},
+            )
+            if crash is not None:
+                crash("after_alter", ep.epoch)
+        self.registry.commit_version(renames, adds, ep.epoch)
+        ep.snap, ep.versions = ep.table.snapshot(), self._registry_versions()
+        return True
+
+    def _quarantine(self, ep: _Epoch, staged: DataFrame, cols: list[str],
+                    per_bucket: list[Row]) -> None:
+        """Phase: the reference's per-row 'failure' relationship
+        (ExecuteRuleEngine.java:477-481,610-662): bad-key and malformed
+        rows land, as read, in a per-key quarantine dir (overwrite, so
+        crash-replays stay idempotent); the epoch proceeds."""
+        if sum(r["badkey"] for r in per_bucket) + ep.n_malformed == 0:
+            return
+        staged.filter(F.col("_badkey") | F.col(MALFORMED_COL)).select(
+            *[c for c in cols if c != "epoch"]
+        ).write.mode("overwrite").parquet(fsio.join(self.quarantine_dir, f"epoch={ep.key}"))
+
+    def _compact(self, ep: _Epoch) -> None:
+        """Phase: MOR compaction every ``compact_every`` epochs —
+        bucket-scoped: only buckets that accumulated deltas are rewritten;
+        cold buckets keep their files byte-for-byte."""
+        if self.merge_mode != "mor" or not self.compact_every:
+            return
+        self._epochs_since_compact += 1
+        if self._epochs_since_compact >= self.compact_every:
+            ep.sid = ep.table.compact(lineage={"op": "compact", "epoch": ep.epoch},
+                                      min_deltas=1)
+            self._epochs_since_compact = 0
+
+    def _record(self, ep: _Epoch, per_bucket: list[Row], stale_wm: int | None = None) -> dict:
+        """Phase: metrics record, then the exactly-once marker. ``stale_wm``:
+        the guard skipped the epoch below this watermark."""
+        stale = {} if stale_wm is None else {"skipped_stale": True,
+                                              "tombstone_watermark": stale_wm}
+        maxc = [int(r["maxc"]) for r in per_bucket if r["maxc"] is not None]
+        if self._max_commit_seq is not None:
+            maxc.append(self._max_commit_seq)
+        self._max_commit_seq = max(maxc, default=None)
         n_badkey = int(sum(r["badkey"] for r in per_bucket))
-        maxc = [r["maxc"] for r in per_bucket if r["maxc"] is not None]
-        if maxc:
-            m = int(max(maxc))
-            self._max_commit_seq = (
-                m if self._max_commit_seq is None else max(self._max_commit_seq, m)
-            )
-        n_corrupt = n_badkey + n_malformed
-        if n_corrupt > 0:
-            # the reference's per-row 'failure' relationship
-            # (ExecuteRuleEngine.java:477-481,610-662): corrupt rows land in a
-            # quarantine table with their raw payload, the epoch proceeds
-            quarantine = raw.filter(malformed_json(F.col("payload_json")) | is_badkey)
-            # per-key dir + overwrite => crash-replays stay idempotent
-            quarantine.drop("epoch").write.mode("overwrite").parquet(
-                fsio.join(self.quarantine_dir, f"epoch={key}")
-            )
-
-        if self.merge_mode == "mor" and self.compact_every:
-            self._epochs_since_compact += 1
-            if self._epochs_since_compact >= self.compact_every:
-                # bucket-scoped: only buckets that accumulated deltas are
-                # rewritten; cold buckets keep their files byte-for-byte
-                new_sid = table.compact(
-                    lineage={"op": "compact", "epoch": epoch}, min_deltas=1
-                )
-                self._epochs_since_compact = 0
-
-        if crash is not None:
-            crash("after_merge", epoch)
-
-        # 5. metrics + exactly-once marker
         rec = {
-            "epoch": epoch,
-            "marker": str(key),
-            "snapshot_id": new_sid,
+            "epoch": ep.epoch,
+            "marker": str(ep.key),
+            "snapshot_id": ep.sid,
             "rows_in": int(sum(r["rows"] for r in per_bucket)),
-            "rows_corrupt": n_corrupt,
-            "affected_buckets": mstats.get("affected_buckets"),
-            "wall_ms": int((time.monotonic() - t0) * 1000),
-            "schema_version": ver["version"] if ver else 0,
-            "input_files": input_files,
+            "rows_corrupt": n_badkey + ep.n_malformed,
+            "affected_buckets": ep.affected_buckets,
+            "wall_ms": int((time.monotonic() - ep.t0) * 1000),
+            "schema_version": ep.versions[-1]["version"] if ep.versions else 0,
+            "input_files": ep.input_files,
             "rows_upserted": int(
                 sum(r["rows"] - r["dels"] - r["badkey"] for r in per_bucket)
-            ) - n_malformed,
+            ) - ep.n_malformed,
             "rows_deleted": int(sum(r["dels"] for r in per_bucket)),
             "partitions": [
                 {"bucket": int(r["_b"]), "rows": int(r["rows"])} for r in per_bucket
             ],
+            **stale,
             # persisted high-water mark: lets a fresh process derive the
             # tombstone-expiry watermark in maintain() without replaying
             "max_commit_seq": self._max_commit_seq,
         }
         if self.collect_metrics:
             self.metrics.append(rec)
-        self.checkpoints.commit(key, {"snapshot_id": new_sid})
+        done = {"snapshot_id": ep.sid}
+        if stale:
+            done["skipped_stale"] = True
+        self.checkpoints.commit(ep.key, done)
         return rec
 
     def maintain(self, tombstones: bool = True, snapshots: bool = True) -> dict:

@@ -279,8 +279,14 @@ def _parquet_footer_stats(path: str, bloom_cols: tuple[str, ...] = ()) -> dict |
             if "." in name or name in bad:
                 continue
             st = col.statistics
-            lo = _scalar(st.min) if st is not None and st.has_min_max else None
-            hi = _scalar(st.max) if st is not None and st.has_min_max else None
+            try:
+                lo = _scalar(st.min) if st is not None and st.has_min_max else None
+                hi = _scalar(st.max) if st is not None and st.has_min_max else None
+            except NotImplementedError:
+                # pyarrow cannot decode every physical encoding's stats
+                # (pyarrow 16: a decimal stored as INT64 raises
+                # ArrowNotImplementedError) -> the column is stats-less
+                lo = hi = None
             if lo is None or hi is None:
                 bad.add(name)
                 mins.pop(name, None)
@@ -477,7 +483,18 @@ class IceliteTable:
         in the manifest — equality/IN scans on them skip files the value
         provably isn't in. Choose high-cardinality NON-key columns whose
         values scatter across buckets (key columns already collapse to
-        their hash bucket; clustered columns already prune on min/max)."""
+        their hash bucket; clustered columns already prune on min/max).
+
+        Key columns of a collated string type are refused: the merge's LWW
+        window cannot partition on them (Spark raises an internal error),
+        so such a table could never be written."""
+        for k in key:
+            dt = schema[k].dataType
+            if isinstance(dt, T.StringType) and dt.collation != "UTF8_BINARY":
+                raise ValueError(
+                    f"key column {k!r} has collated type {dt.simpleString()}; "
+                    "key columns must be binary-collated strings or non-string types"
+                )
         t = cls(spark, path)
         fsio.makedirs(t.meta_dir)
         fsio.makedirs(t.data_dir)
@@ -520,42 +537,31 @@ class IceliteTable:
         bounded by the buckets a task owns."""
         return max(1, min(n_affected, self.spark.sparkContext.defaultParallelism))
 
-    def _file_entry(self, path: str, schema_version: int, kind: str | None = None) -> dict:
-        """Manifest entry for a freshly written data file: path, size, the
-        schema version it was written under, and (local files) footer-derived
-        column min/max stats — plus per-file blooms for the table's
-        configured ``bloom_cols`` — for scan-time file skipping."""
-        fe: dict = {"path": path, "schema_version": schema_version,
+    def _file_entry(self, path: str, snap: dict, kind: str | None = None) -> dict:
+        """Manifest entry for a file freshly written on top of ``snap``:
+        path, size, the schema version it was written under, and (local
+        files) footer-derived column min/max stats — plus per-file blooms
+        for the table's configured ``bloom_cols`` (a snapshot property set
+        at create time and carried by every commit) — for scan-time file
+        skipping."""
+        fe: dict = {"path": path, "schema_version": snap["schema_version"],
                     "bytes": fsio.getsize(path)}
         if kind:
             fe["kind"] = kind
-        st = _parquet_footer_stats(path, bloom_cols=self._bloom_cols())
+        st = _parquet_footer_stats(path, bloom_cols=tuple(snap.get("bloom_cols") or ()))
         if st:
             fe["stats"] = st
         return fe
 
-    def _bloom_cols(self) -> tuple[str, ...]:
-        """The table's configured bloom columns (snapshot property, set at
-        create time, propagated by every commit). Memoized per instance —
-        _file_entry runs once per written file."""
-        memo = getattr(self, "_bloom_cols_memo", None)
-        if memo is None:
-            try:
-                memo = tuple(self.snapshot().get("bloom_cols") or ())
-            except Exception:
-                memo = ()
-            self._bloom_cols_memo = memo
-        return memo
-
-    def _bucket_entries(self, bdir: str, schema_version: int, kind: str | None = None) -> list[dict]:
+    def _bucket_entries(self, bdir: str, snap: dict, kind: str | None = None) -> list[dict]:
         return [
-            self._file_entry(fsio.join(bdir, fn), schema_version, kind)
+            self._file_entry(fsio.join(bdir, fn), snap, kind)
             for fn in fsio.listdir(bdir)
             if fn.endswith(".parquet")
         ]
 
     def _bucket_entries_par(
-        self, bdirs: list[tuple[str, str]], schema_version: int, kind: str | None = None
+        self, bdirs: list[tuple[str, str]], snap: dict, kind: str | None = None
     ) -> dict[str, list[dict]]:
         """Manifest entries for many freshly written bucket dirs, footer
         reads in a small thread pool — the per-file pyarrow metadata reads
@@ -563,16 +569,15 @@ class IceliteTable:
         buckets was paying N serial opens on the driver."""
         from concurrent.futures import ThreadPoolExecutor
 
-        self._bloom_cols()  # populate the memo before fanning out
         if len(bdirs) <= 1:
-            return {b: self._bucket_entries(d, schema_version, kind) for b, d in bdirs}
+            return {b: self._bucket_entries(d, snap, kind) for b, d in bdirs}
         # pyarrow releases the GIL for the footer read; size the pool to
         # the local cores (a 64-bucket commit at 16 threads paid 4 serial
         # rounds of opens — r06)
         width = min(os.cpu_count() or 16, len(bdirs))
         with ThreadPoolExecutor(max_workers=width) as ex:
             futs = [
-                (b, ex.submit(self._bucket_entries, d, schema_version, kind))
+                (b, ex.submit(self._bucket_entries, d, snap, kind))
                 for b, d in bdirs
             ]
             return {b: f.result() for b, f in futs}
@@ -596,7 +601,7 @@ class IceliteTable:
             for entry in fsio.listdir(out_dir)
             if entry.startswith("_bucket=")
         ]
-        return self._bucket_entries_par(bdirs, snap["schema_version"], kind)
+        return self._bucket_entries_par(bdirs, snap, kind)
 
     def _commit_next(self, snap: dict, buckets: dict, lineage: dict,
                      publish: bool = True, **meta: Any) -> int:
@@ -650,7 +655,6 @@ class IceliteTable:
         snapshot_id: int | None = None,
         buckets: list[int] | None = None,
         include_deleted: bool = False,
-        _resolve: bool = True,
     ) -> DataFrame:
         """Read current (or time-travel) state, remapping columns by field id.
 
@@ -661,8 +665,7 @@ class IceliteTable:
         tombstones older than the max event lateness bounds their growth
         at scale (see ``expire_tombstones``).
         """
-        return self._read(self.snapshot(snapshot_id), buckets, include_deleted,
-                          resolve=_resolve)
+        return self._read(self.snapshot(snapshot_id), buckets, include_deleted)
 
     def _read(
         self,
@@ -1022,12 +1025,12 @@ class IceliteTable:
             else:
                 old_cols.append(F.lit(None).cast(_type_from_json(f["type"])).alias(f["name"]))
         old = (
-            self.read(from_snapshot_id, buckets=buckets)
+            self._read(snap_f, buckets)
             .select(*old_cols)
             .select(*[F.col(c).alias(f"_o_{c}") for c in names])
         )
         new = (
-            self.read(to_snapshot_id, buckets=buckets)
+            self._read(snap_t, buckets)
             .select(*[F.col(c).alias(f"_n_{c}") for c in names])
         )
 
@@ -1096,6 +1099,7 @@ class IceliteTable:
         lineage: dict | None = None,
         affected: list[int] | None = None,
         publish: bool = True,
+        snap: dict | None = None,
     ) -> tuple[int, dict]:
         """Merge-on-read MERGE: append the change rows as *delta* files for
         their buckets — NO read of existing data, NO shuffle of the table.
@@ -1113,8 +1117,11 @@ class IceliteTable:
         the table, so the affected set is derived post-hoc from the
         written partition dirs — zero pre-merge jobs. The apply loop uses
         this to run its stats job CONCURRENTLY with the merge.
+
+        ``snap``: the current snapshot when the caller already loaded it
+        (as for ``merge``).
         """
-        snap = self.snapshot()
+        snap = snap or self.snapshot()
         key, nb = snap["key"], snap["n_buckets"]
         data_cols = self.field_names(snap)
         ch = changes.withColumn("_bucket", bucket_expr(key, nb))
@@ -1156,13 +1163,7 @@ class IceliteTable:
 
     def delta_buckets(self, min_deltas: int = 1) -> list[int]:
         """Bucket ids whose delta-file count is >= ``min_deltas``."""
-        snap = self.snapshot()
-        out = []
-        for b, files in snap["buckets"].items():
-            n = sum(1 for fe in files if fe.get("kind", "base") == "delta")
-            if n >= min_deltas:
-                out.append(int(b))
-        return sorted(out)
+        return _delta_buckets(self.snapshot(), min_deltas)
 
     def compact(
         self,
@@ -1181,12 +1182,12 @@ class IceliteTable:
           * neither: full compaction (bootstrap / small tables).
         Untouched buckets keep their existing data files byte-for-byte.
         """
-        if buckets is None and min_deltas is not None:
-            buckets = self.delta_buckets(min_deltas)
-        if buckets is None:
-            resolved = self.read(include_deleted=True)
-            return self.overwrite(resolved, lineage=lineage or {"op": "compact"})
         snap = self.snapshot()
+        if buckets is None and min_deltas is not None:
+            buckets = _delta_buckets(snap, min_deltas)
+        if buckets is None:
+            resolved = self._read(snap, include_deleted=True)
+            return self.overwrite(resolved, lineage or {"op": "compact"}, snap=snap)
         if not buckets:
             return snap["snapshot_id"]
         key = snap["key"]
@@ -1199,7 +1200,7 @@ class IceliteTable:
         # partitions by (key, seq desc) and keep each key group's head —
         # byte-identical winners (the same _lww_heads as _resolve_lww), half
         # the data movement.
-        raw = self.read(buckets=buckets, include_deleted=True, _resolve=False)
+        raw = self._read(snap, buckets, include_deleted=True, resolve=False)
         resolved = _lww_heads(
             raw.withColumn("_bucket", bucket_expr(key, snap["n_buckets"]))
             .repartition(self._merge_partitions(len(buckets)), F.col("_bucket")),
@@ -1270,7 +1271,7 @@ class IceliteTable:
         non_empty = [b for b, fs in snap["buckets"].items() if fs]
         if not non_empty:
             return snap["snapshot_id"]
-        resolved = self.read(include_deleted=True)
+        resolved = self._read(snap, include_deleted=True)
         order: list = ["_bucket", *sort_cols]
         if zorder:
             # true multi-dim clustering: sort by the Morton interleave so
@@ -1317,6 +1318,7 @@ class IceliteTable:
         lineage: dict | None = None,
         affected: list[int] | None = None,
         publish: bool = True,
+        snap: dict | None = None,
     ) -> tuple[int, dict]:
         """Apply a change-set with columns ``key + data columns (current
         names) + op + commit_seq + event_seq``. Multiple rows per key are
@@ -1339,8 +1341,12 @@ class IceliteTable:
         ``publish_snapshot(sid)`` fast-forwards it; ``abort_staged(sid)``
         discards it. One staged snapshot at a time — any later published
         commit re-bases off the published head and invalidates the stage.
+
+        ``snap``: the current snapshot when the caller already loaded it
+        (the apply loop loads one per epoch); the merge reads and commits
+        on exactly that snapshot.
         """
-        snap = self.snapshot()
+        snap = snap or self.snapshot()
         key = snap["key"]
         data_cols = self.field_names(snap)
         bexpr = bucket_expr(key, snap["n_buckets"])
@@ -1353,7 +1359,7 @@ class IceliteTable:
             return snap["snapshot_id"], {"affected_buckets": 0, "rows_written": 0}
 
         old = (
-            self.read(buckets=affected, include_deleted=True)
+            self._read(snap, affected, include_deleted=True)
             .withColumn("_bucket", bexpr)
             .withColumn("_is_change", F.lit(0))
         )
@@ -1435,15 +1441,17 @@ class IceliteTable:
         event older than the watermark could resurrect a deleted row — the
         apply loop's staleness guard uses this value to skip or refuse such
         events loudly instead of silently diverging."""
-        live = self.read(include_deleted=True).filter(
+        snap = self.snapshot()
+        live = self._read(snap, include_deleted=True).filter(
             ~F.col("_deleted") | (F.col("_commit_seq") >= min_commit_seq)
         )
-        prev = self.snapshot().get("tombstone_watermark")
+        prev = snap.get("tombstone_watermark")
         wm = min_commit_seq if prev is None else max(prev, min_commit_seq)
         return self.overwrite(
             live,
-            lineage=lineage or {"op": "expire_tombstones", "watermark": min_commit_seq},
+            lineage or {"op": "expire_tombstones", "watermark": min_commit_seq},
             extra_meta={"tombstone_watermark": wm},
+            snap=snap,
         )
 
     def rebucket(self, n_buckets: int, lineage: dict | None = None) -> int:
@@ -1461,25 +1469,26 @@ class IceliteTable:
             return snap["snapshot_id"]
         if n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-        full = self.read(include_deleted=True)
         return self.overwrite(
-            full,
-            lineage=lineage or {
-                "op": "rebucket", "from": snap["n_buckets"], "to": n_buckets
-            },
+            self._read(snap, include_deleted=True),
+            lineage or {"op": "rebucket", "from": snap["n_buckets"], "to": n_buckets},
             n_buckets=n_buckets,
+            snap=snap,
         )
 
     def overwrite(self, df: DataFrame, lineage: dict | None = None,
-                  extra_meta: dict | None = None, n_buckets: int | None = None) -> int:
+                  extra_meta: dict | None = None, n_buckets: int | None = None,
+                  snap: dict | None = None) -> int:
         """Full rewrite (bootstrap/backfill/rebucket path). df: data cols +
         SYS_COLS. ``n_buckets`` overrides the bucket count for this and
-        all FUTURE snapshots (used by ``rebucket``)."""
+        all FUTURE snapshots (used by ``rebucket``). ``snap``: the current
+        snapshot when the caller already loaded it (the rewrites that read
+        ``df`` from the table commit on the snapshot they read)."""
+        snap = snap or self.snapshot()
         if "_deleted" not in df.columns:
             df = df.withColumn("_deleted", F.lit(False))
         if "_delta_seq" not in df.columns:
             df = df.withColumn("_delta_seq", F.lit(0).cast("long"))
-        snap = self.snapshot()
         if n_buckets is not None and n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
         key, nb = snap["key"], (n_buckets if n_buckets is not None else snap["n_buckets"])
@@ -1572,6 +1581,14 @@ class IceliteTable:
         mpath = fsio.join(self.meta_dir, f"v{snapshot_id}.json")
         if fsio.exists(mpath):
             fsio.remove(mpath)
+
+
+def _delta_buckets(snap: dict, min_deltas: int) -> list[int]:
+    """Bucket ids of ``snap`` whose delta-file count is >= ``min_deltas``."""
+    return sorted(
+        int(b) for b, files in snap["buckets"].items()
+        if sum(1 for fe in files if fe.get("kind", "base") == "delta") >= min_deltas
+    )
 
 
 def _resolve_lww(df: DataFrame, key: list[str], n_buckets: int) -> DataFrame:

@@ -66,16 +66,17 @@ def test_changes_bucket_pruning(spark, tbl, monkeypatch):
     s1, _ = tbl.merge(_chset(spark, [(k, f"v{k}", "U") for k in range(40)], 1))
     s2, _ = tbl.merge(_chset(spark, [(7, "CHANGED", "U")], 2))
     seen = {}
-    orig = IceliteTable.read
+    orig = IceliteTable._read
 
-    def spy(self, snapshot_id=None, buckets=None, include_deleted=False):
+    def spy(self, snap, buckets=None, *args, **kwargs):
         seen.setdefault("buckets", []).append(buckets)
-        return orig(self, snapshot_id, buckets, include_deleted)
+        return orig(self, snap, buckets, *args, **kwargs)
 
-    monkeypatch.setattr(IceliteTable, "read", spy)
+    monkeypatch.setattr(IceliteTable, "_read", spy)
     got = _feed(tbl, s1, s2)
     assert got == {(7, "update_preimage"): "v7", (7, "update_postimage"): "CHANGED"}
     # epoch 2 touched exactly one bucket -> both reads pruned to it
+    assert len(seen["buckets"]) == 2
     assert all(b is not None and len(b) == 1 for b in seen["buckets"])
 
 

@@ -1,8 +1,9 @@
 """Driver-side key -> bucket hashing (``bucket_of``) and the point-lookup
 path built on it: parity with the writers' ``bucket_expr`` over random
 rows, a fall-back to unpruned (but correct) scans for types and literals
-it does not hash, one snapshot load per scan, and the Spark job count of
-a lookup."""
+it does not hash, one snapshot load per scan and per table operation, and
+the Spark job count of a lookup. Collated string keys are refused at
+create."""
 
 import random
 import re
@@ -158,7 +159,9 @@ def cow(spark, tmp_path):
     return t
 
 
-def test_scan_loads_snapshot_once(cow, monkeypatch):
+@pytest.fixture()
+def meta_reads(monkeypatch):
+    """() -> (VERSION reads, snapshot JSON reads) since the last call."""
     reads = []
     real = fsio.read_text
 
@@ -168,18 +171,99 @@ def test_scan_loads_snapshot_once(cow, monkeypatch):
 
     monkeypatch.setattr(fsio, "read_text", counting)
 
-    def meta_reads():
+    def count():
         names = [p.rsplit("/", 1)[-1] for p in reads]
         reads.clear()
         return (sum(n == "VERSION" for n in names),
                 sum(bool(re.fullmatch(r"v\d+\.json", n)) for n in names))
 
+    return count
+
+
+def test_scan_loads_snapshot_once(cow, meta_reads):
     cow.scan([("k", "=", 37)])
     assert meta_reads() == (1, 1)
     cow.scan([("v", ">=", 500)])
     assert meta_reads() == (1, 1)
     cow.scan([("k", "=", 37)], snapshot_id=1)
     assert meta_reads() == (0, 1)
+
+
+@pytest.mark.parametrize("op", [
+    "merge", "merge_mor", "compact_buckets", "compact_min_deltas", "compact_full",
+    "cluster", "rebucket", "expire_tombstones"])
+def test_table_op_loads_snapshot_once(spark, cow, meta_reads, op):
+    """Each writer loads the snapshot it commits on once (VERSION + JSON)
+    and reads the table through that same snapshot."""
+    cow.merge_mor(_chset(spark, [(3, -3, "U"), (4, None, "D")], 2))
+    ops = {
+        "merge": lambda: cow.merge(_chset(spark, [(5, -5, "U")], 3)),
+        "merge_mor": lambda: cow.merge_mor(_chset(spark, [(5, -5, "U")], 3)),
+        "compact_buckets": lambda: cow.compact(buckets=[0, 1]),
+        "compact_min_deltas": lambda: cow.compact(min_deltas=1),
+        "compact_full": lambda: cow.compact(),
+        "cluster": lambda: cow.cluster(["v"]),
+        "rebucket": lambda: cow.rebucket(5),
+        "expire_tombstones": lambda: cow.expire_tombstones(3),
+    }
+    meta_reads()
+    ops[op]()
+    assert meta_reads() == (1, 1)
+
+
+def test_merge_on_a_loaded_snapshot_loads_none(spark, cow, meta_reads):
+    snap = cow.snapshot()
+    meta_reads()
+    cow.merge(_chset(spark, [(5, -5, "U")], 2), snap=snap)
+    cow.merge_mor(_chset(spark, [(6, -6, "U")], 3), snap=cow.snapshot())
+    assert meta_reads() == (1, 1)  # the second merge's explicit snapshot() only
+    assert {r["k"]: r["v"] for r in cow.read().collect()}[5] == -5
+
+
+def test_changes_loads_each_snapshot_once(spark, cow, meta_reads):
+    cow.merge(_chset(spark, [(5, -5, "U"), (6, None, "D")], 2))
+    meta_reads()
+    feed = cow.changes(1, 2)
+    assert meta_reads() == (0, 2)
+    assert sorted((r["k"], r["_change_type"]) for r in feed.collect()) == [
+        (5, "update_postimage"), (5, "update_preimage"), (6, "delete")]
+
+
+@pytest.mark.parametrize("op", ["rebucket", "expire_tombstones"])
+def test_rewrite_reads_the_snapshot_it_commits_on(spark, cow, monkeypatch, op):
+    """A commit landing after a rewrite loaded its snapshot must not leak
+    into the rows it rewrites: files and manifest agree on one schema."""
+    real = IceliteTable.snapshot
+    renamed = []
+
+    def snapshot_then_rename(self, snapshot_id=None):
+        out = real(self, snapshot_id)
+        if snapshot_id is None and not renamed:
+            renamed.append(1)
+            self.alter({"v": "w"}, [])
+        return out
+
+    monkeypatch.setattr(IceliteTable, "snapshot", snapshot_then_rename)
+    if op == "rebucket":
+        cow.rebucket(5)
+    else:
+        cow.expire_tombstones(1)
+    monkeypatch.undo()
+    got = {r["k"]: r["v"] for r in cow.read().collect()}
+    assert cow.field_names() == ["k", "v"]
+    assert got == {k: k * 10 for k in range(200)}
+
+
+def test_collated_string_key_is_refused(spark, tmp_path):
+    schema = T.StructType([T.StructField("k", T.StringType("UTF8_LCASE")),
+                           T.StructField("v", T.StringType("UTF8_LCASE"))])
+    with pytest.raises(ValueError, match="'k'"):
+        IceliteTable.create(spark, str(tmp_path / "t"), schema, key=["k"])
+    assert not IceliteTable.exists(str(tmp_path / "t"))
+    # a collated NON-key column stays allowed
+    IceliteTable.create(spark, str(tmp_path / "u"),
+                        T.StructType([T.StructField("k", T.StringType()), schema["v"]]),
+                        key=["k"])
 
 
 def test_scan_reads_the_snapshot_it_pruned(spark, cow, monkeypatch):

@@ -242,3 +242,26 @@ def test_batch_lookup_in_prunes_to_bucket_union(tbl):
     assert tbl.scan([("k", "=", 5), ("k", "=", 6)]).count() == 0
     with pytest.raises(ValueError, match="'in' filter"):
         tbl.scan([("k", "in", 5)])
+
+
+def test_decimal_column_merges_reads_and_scans(spark, tmp_path):
+    """Spark stores decimal(10,2) as INT64, whose footer stats pyarrow
+    cannot decode: the column is recorded stats-less (no pruning on it)
+    instead of failing the merge after its files are written."""
+    from decimal import Decimal
+
+    schema = T.StructType([T.StructField("k", T.LongType()),
+                           T.StructField("d", T.DecimalType(10, 2))])
+    t = IceliteTable.create(spark, str(tmp_path / "t"), schema, key=["k"], n_buckets=4)
+    rows = [(k, Decimal(k) / 4, "U") for k in range(40)]
+    ch = spark.createDataFrame(rows, "k long, d decimal(10,2), op string")
+    t.merge(ch.select("k", "d", "op", F.lit(1).alias("commit_seq"),
+                      F.col("k").alias("event_seq")))
+    entries = [fe for fs in t.snapshot()["buckets"].values() for fe in fs]
+    assert entries and all("d" not in fe["stats"].get("mins", {}) for fe in entries)
+    assert all("k" in fe["stats"]["mins"] for fe in entries)
+    assert sorted((r["k"], r["d"]) for r in t.read().collect()) == \
+        [(k, Decimal(k) / 4) for k in range(40)]
+    got = t.scan([("d", ">=", Decimal("9.00"))]).collect()
+    assert sorted(r["k"] for r in got) == list(range(36, 40))
+    assert [r["d"] for r in t.scan([("k", "=", 7)]).collect()] == [Decimal("1.75")]
