@@ -616,16 +616,19 @@ class ChangeApplier:
             self.spark, fsio.join(self.views_dir, name), group_cols, value_cols
         )
 
-    def refresh_views(self) -> dict[str, dict]:
+    def refresh_views(self, feed: dict | None = None) -> dict[str, dict]:
         """Bring every configured view up to the current table snapshot —
         delta-fold of the change feed since each view's recorded base
-        (noop when already current; bootstrap/rebuild scans once)."""
+        (noop when already current; bootstrap/rebuild scans once).
+        ``feed`` is the record ``publish_outbox`` returned for this
+        snapshot: a view whose base is its ``from_snapshot`` folds the
+        published segment instead of computing the feed again."""
         if not self.views:  # avoid a per-epoch snapshot load for the
             return {}       # common no-views applier (r06)
         t = self._table()
         if t is None:
             return {}
-        return {name: self.view(name).refresh(t) for name in self.views}
+        return {name: self.view(name).refresh(t, feed) for name in self.views}
 
     def publish_outbox(self) -> dict | None:
         """Publish the change feed since the last published snapshot
@@ -641,15 +644,21 @@ class ChangeApplier:
         """Apply all pending epochs in order (exactly-once via markers),
         interleaving the configured maintenance cadences — a 100-epoch run
         with ``expire_snapshots_every`` set keeps meta/ bounded instead of
-        accumulating one snapshot file (+ orphaned data) per epoch. Views
-        refresh after each epoch (BEFORE maintenance, so the delta fold
-        reads the epoch's touched buckets, not a maintenance rewrite)."""
+        accumulating one snapshot file (+ orphaned data) per epoch.
+
+        After each epoch: the outbox publishes the epoch's change feed,
+        then the views fold that same segment (one ``changes`` per
+        epoch), then maintenance runs — after both, so the feed reads the
+        epoch's touched buckets, not a maintenance rewrite. A view left
+        behind by a crash computes its own feed from its base; with no
+        epoch pending, the outbox and views are caught up once."""
         out = []
         for e in self.pending_epochs():
             out.append(self.apply_epoch(e, crash=crash))
-            self.refresh_views()
-            self.publish_outbox()
+            self.refresh_views(self.publish_outbox())
             self._tick_maintenance()
+        if not out:  # a crash after the last marker can leave them behind
+            self.refresh_views(self.publish_outbox())
         return out
 
     def state(self) -> DataFrame:

@@ -110,7 +110,11 @@ class MaterializedView:
 
     ``refresh()`` folds only the change feed between the recorded and the
     current snapshot (``agg_delta`` + one key join — the 100 TB table is
-    never rescanned); the bootstrap (and the fallback when snapshot
+    never rescanned). When the caller hands it the record of an outbox
+    publish that spans exactly that range, the feed is the published
+    segment, a small parquet read; otherwise the view computes
+    ``table.changes`` itself (a view added later, or one a crash left
+    behind the outbox). The bootstrap (and the fallback when snapshot
     expiry has reaped the recorded base — the retention trade, surfaced
     in the refresh record as ``mode: rebuild``) is one ``grouped_agg``
     over the pinned snapshot. Crash-safe: the data directory for the new
@@ -119,8 +123,11 @@ class MaterializedView:
 
     Layout::
 
-        path/VIEW            -> {"snapshot_id": n, "data": "gen{n}"}
-        path/gen{n}/*.parquet
+        path/VIEW            -> {"snapshot_id": n, "data": "gen{m}"}
+        path/gen{m}/*.parquet
+
+    ``m`` is the snapshot the data was last written at: a range that
+    changed no row moves only the pointer.
     """
 
     def __init__(self, spark, path: str, group_cols: list[str],
@@ -145,28 +152,38 @@ class MaterializedView:
         return self.spark.read.parquet(
             self._fsio.join(self.path, ptr["data"]))
 
-    def refresh(self, table) -> dict:
+    def refresh(self, table, feed: dict | None = None) -> dict:
         """Bring the view up to the table's current snapshot. Returns a
         record: {snapshot_id, from_snapshot, mode: bootstrap|delta|noop|
-        rebuild}."""
+        rebuild}; a delta record also names its ``feed``: ``outbox`` or
+        ``changes``.
+
+        ``feed``: the record of a ``ChangeOutbox.publish`` on this table.
+        It is folded only if it runs from this view's snapshot to the
+        current one; any other record is ignored."""
         fsio = self._fsio
         cur = table.current_snapshot_id()
         ptr = self.pointer()
         if ptr is not None and ptr["snapshot_id"] == cur:
             return {"snapshot_id": cur, "mode": "noop"}
         mode = "bootstrap" if ptr is None else "delta"
-        trigger = None
-        if ptr is None:
-            new = grouped_agg(table.read(snapshot_id=cur),
-                              self.group_cols, self.value_cols)
-        else:
+        rec = {"snapshot_id": cur,
+               "from_snapshot": None if ptr is None else ptr["snapshot_id"],
+               "mode": mode}
+        delta = None  # stays None: build from scratch
+        if (ptr is not None and feed is not None and feed.get("mode") == "publish"
+                and (feed["from_snapshot"], feed["snapshot_id"]) == (ptr["snapshot_id"], cur)):
+            rec["feed"] = "outbox"
+            if feed["segment"] is None:  # no row changed: same view
+                fsio.publish_json(self._ptr, {"snapshot_id": cur, "data": ptr["data"]})
+                return rec
+            delta = self.spark.read.parquet(feed["segment"])
+        elif ptr is not None:
             from .table import SnapshotExpiredError
 
             try:
-                feed = table.changes(ptr["snapshot_id"], cur)
-                delta = agg_delta(feed, self.group_cols, self.value_cols)
-                new = apply_agg_delta(self.read(), delta,
-                                      self.group_cols, self.value_cols)
+                delta = table.changes(ptr["snapshot_id"], cur)
+                rec["feed"] = "changes"
             except SnapshotExpiredError as e:
                 # recorded base snapshot expired (retention trade): one
                 # full rebuild re-anchors the view; later refreshes are
@@ -174,20 +191,18 @@ class MaterializedView:
                 # rebuild — any other failure in the delta path is a real
                 # bug or transient fault and must propagate, not silently
                 # become a full table rescan on every refresh (ADVICE r5).
-                mode = "rebuild"
-                trigger = str(e)
-                new = grouped_agg(table.read(snapshot_id=cur),
-                                  self.group_cols, self.value_cols)
+                rec.update(mode="rebuild", trigger=str(e))
+        if delta is None:
+            new = grouped_agg(table.read(snapshot_id=cur),
+                              self.group_cols, self.value_cols)
+        else:
+            new = apply_agg_delta(
+                self.read(), agg_delta(delta, self.group_cols, self.value_cols),
+                self.group_cols, self.value_cols)
         gen = f"gen{cur}"
-        out_dir = fsio.join(self.path, gen)
-        new.write.mode("overwrite").parquet(out_dir)
+        new.write.mode("overwrite").parquet(fsio.join(self.path, gen))
         fsio.publish_json(self._ptr, {"snapshot_id": cur, "data": gen})
         self._expire_generations(keep=[gen])
-        rec = {"snapshot_id": cur,
-               "from_snapshot": None if ptr is None else ptr["snapshot_id"],
-               "mode": mode}
-        if trigger is not None:
-            rec["trigger"] = trigger
         return rec
 
     def _expire_generations(self, keep: list[str]) -> None:

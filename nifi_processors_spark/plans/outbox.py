@@ -27,7 +27,15 @@ Guarantees:
     still advances, and no empty segment is written.
   * **Scale**: each publish reads only the buckets whose file entries
     differ between the two snapshots (manifest pruning inside
-    ``changes``) — never the table.
+    ``changes``) — never the table. The feed is computed once and
+    written once: the segment's row count is an observation on that
+    write, not a second read of the segment.
+
+The segment is also the epoch's change feed for every other incremental
+consumer: ``publish`` returns its path in the record, and a
+``MaterializedView`` whose base is the record's ``from_snapshot`` folds
+that segment (a small parquet read) instead of computing
+``table.changes`` again (plans/ivm.py).
 
 Replay contract (tested): base-snapshot rows, minus the keys of
 ``delete``/``update_preimage`` rows, plus ``insert``/``update_postimage``
@@ -39,7 +47,7 @@ notion of state or deltas); SURVEY.md §2.12 change-feed family.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import fsio
@@ -71,7 +79,9 @@ class ChangeOutbox:
 
     def publish(self, table) -> dict:
         """Bring the outbox up to the table's current snapshot. Returns
-        {mode: bootstrap|noop|publish, from_snapshot, snapshot_id, rows}."""
+        {mode: bootstrap|noop|publish, from_snapshot, snapshot_id, rows,
+        segment}; ``segment`` is the path of the range's parquet segment,
+        or None when the range changed no row."""
         fsio.makedirs(self.path)
         cur = table.current_snapshot_id()
         ptr = self.pointer()
@@ -105,14 +115,16 @@ class ChangeOutbox:
             if entry.startswith(f"seg_{frm}_") and entry != f"seg_{frm}_{cur}":
                 fsio.rmtree(fsio.join(self.path, entry))
         seg = fsio.join(self.path, f"seg_{frm}_{cur}")
-        feed.write.mode("overwrite").parquet(seg)
-        # count from the files just written (no second feed computation)
-        rows = self.spark.read.parquet(seg).count()
+        written = Observation()
+        (feed.observe(written, F.count(F.lit(1)).alias("rows"))
+         .write.mode("overwrite").parquet(seg))
+        rows = written.get["rows"]
         if rows == 0:
             fsio.rmtree(seg)  # maintenance-only range: no segment
+            seg = None
         fsio.publish_json(self._ptr, {"snapshot_id": cur})
         return {"mode": "publish", "from_snapshot": frm,
-                "snapshot_id": cur, "rows": rows}
+                "snapshot_id": cur, "rows": rows, "segment": seg}
 
     def segments(self) -> list[str]:
         if not fsio.exists(self.path):

@@ -51,6 +51,12 @@ class SnapshotExpiredError(LookupError):
     which must propagate (ADVICE r5)."""
 
 
+class CommitConflictError(RuntimeError):
+    """Another commit landed after this writer loaded the snapshot it
+    builds on: VERSION no longer points at that parent. Nothing of the
+    refused write is published; reload the table and retry."""
+
+
 SYS_COLS = ["_commit_seq", "_event_seq", "_delta_seq", "_deleted"]
 _SYS_TYPES = {
     "_commit_seq": T.LongType(),
@@ -591,6 +597,7 @@ class IceliteTable:
         under ``snap{sid+1}`` — and return bucket -> manifest entries
         (footers read by the pool above). A bucket with no rows writes no
         dir and is absent from the result; the caller folds it."""
+        self._check_parent(snap)
         out_dir = fsio.join(self.data_dir, f"snap{snap['snapshot_id'] + 1}")
         writer = df.write.mode("overwrite").partitionBy("_bucket")
         if max_rows_per_file is not None:
@@ -603,6 +610,24 @@ class IceliteTable:
         ]
         return self._bucket_entries_par(bdirs, snap, kind)
 
+    def _check_parent(self, snap: dict) -> None:
+        """Refuse to build ``snap``'s successor once another commit has
+        succeeded ``snap``: its data dir and snapshot file would replace
+        that commit's (a lost update). A successor file on disk with
+        VERSION still at ``snap`` is this history's own staged or crashed
+        attempt and may be replaced. Costs one stat in the common case; a
+        competing history whose successor file has already been expired
+        is not seen, and two writers racing within one write are not
+        serialized (one writer per table is the engine's contract)."""
+        parent = snap["snapshot_id"]
+        if not fsio.exists(fsio.join(self.meta_dir, f"v{parent + 1}.json")):
+            return
+        head = self.current_snapshot_id()
+        if head != parent:
+            raise CommitConflictError(
+                f"table at {self.path} moved to snapshot {head} after this "
+                f"writer loaded snapshot {parent}; reload and retry")
+
     def _commit_next(self, snap: dict, buckets: dict, lineage: dict,
                      publish: bool = True, **meta: Any) -> int:
         """Commit snapshot ``sid+1`` on top of ``snap``: every property of
@@ -610,7 +635,10 @@ class IceliteTable:
         watermark, ...) unless ``meta`` overrides it. The snapshot JSON is
         written atomically (tmp + rename locally; see plans/fsio.py for
         URI paths); the VERSION pointer moves only if ``publish`` —
-        ``publish=False`` stages the snapshot for write-audit-publish."""
+        ``publish=False`` stages the snapshot for write-audit-publish.
+        Raises ``CommitConflictError`` when another commit has succeeded
+        ``snap`` (``_check_parent``)."""
+        self._check_parent(snap)
         sid = snap["snapshot_id"] + 1
         new_snap = {**snap, "snapshot_id": sid, "parent": snap["snapshot_id"],
                     "buckets": buckets, "lineage": lineage, **meta}

@@ -71,13 +71,13 @@ def stream_apply(
             marker=key,
             observe_metrics=False,
         )
-        # maintained views and the change-feed outbox track the stream
-        # too: fold/publish this micro-batch's change feed (noop when the
-        # batch was empty). Idempotent under foreachBatch replays — a
-        # replayed batch marker-skips above, and refresh()/publish() noop
-        # when already at the current snapshot.
-        applier.refresh_views()
-        applier.publish_outbox()
+        # the change-feed outbox and the maintained views track the
+        # stream too, in the batch loop's order: publish this micro-batch's
+        # change feed once, then fold that segment into the views (both
+        # noop when the batch was empty). Idempotent under foreachBatch
+        # replays — a replayed batch marker-skips above, and
+        # publish()/refresh() noop when already at the current snapshot.
+        applier.refresh_views(applier.publish_outbox())
 
     return (
         stream.writeStream.foreachBatch(apply_batch)

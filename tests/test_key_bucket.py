@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from nifi_processors_spark.plans import fsio
-from nifi_processors_spark.plans.table import IceliteTable, bucket_expr, bucket_of
+from nifi_processors_spark.plans.table import CommitConflictError, IceliteTable, bucket_expr, bucket_of
 
 INT_TYPES = {
     "l": (T.LongType(), 64),
@@ -231,8 +231,9 @@ def test_changes_loads_each_snapshot_once(spark, cow, meta_reads):
 
 @pytest.mark.parametrize("op", ["rebucket", "expire_tombstones"])
 def test_rewrite_reads_the_snapshot_it_commits_on(spark, cow, monkeypatch, op):
-    """A commit landing after a rewrite loaded its snapshot must not leak
-    into the rows it rewrites: files and manifest agree on one schema."""
+    """A commit landing after a rewrite loaded its snapshot is neither
+    leaked into the rows it rewrites nor replaced by its commit: the
+    rewrite refuses, and the other commit stays current."""
     real = IceliteTable.snapshot
     renamed = []
 
@@ -244,14 +245,45 @@ def test_rewrite_reads_the_snapshot_it_commits_on(spark, cow, monkeypatch, op):
         return out
 
     monkeypatch.setattr(IceliteTable, "snapshot", snapshot_then_rename)
-    if op == "rebucket":
-        cow.rebucket(5)
-    else:
-        cow.expire_tombstones(1)
+    with pytest.raises(CommitConflictError, match="moved to snapshot 2"):
+        if op == "rebucket":
+            cow.rebucket(5)
+        else:
+            cow.expire_tombstones(1)
     monkeypatch.undo()
+    assert cow.current_snapshot_id() == 2
+    assert cow.field_names() == ["k", "w"]
+    assert {r["k"]: r["w"] for r in cow.read().collect()} == {k: k * 10 for k in range(200)}
+
+
+def test_merge_after_foreign_commit_is_refused(spark, cow):
+    """Two handles on one table: a merge built on a snapshot another
+    writer has since succeeded must not replace that writer's commit
+    (its snapshot file, its VERSION move or its data files)."""
+    stale = IceliteTable(spark, cow.path)
+    snap = stale.snapshot()
+    cow.merge(_chset(spark, [(7, -7, "U")], 2))
+    with pytest.raises(CommitConflictError):
+        stale.merge(_chset(spark, [(8, -8, "U")], 3), snap=snap)
+    with pytest.raises(CommitConflictError):
+        stale.merge_mor(_chset(spark, [(8, -8, "U")], 3), snap=snap)
+    assert cow.current_snapshot_id() == 2
+    got = {r["k"]: r["v"] for r in stale.read().collect()}
+    assert got == {**{k: k * 10 for k in range(200)}, 7: -7}
+    # the refused writer recovers by reloading
+    stale.merge(_chset(spark, [(8, -8, "U")], 3))
+    assert {r["k"]: r["v"] for r in cow.read().collect()}[8] == -8
+
+
+def test_staged_or_crashed_successor_is_replaced(spark, cow):
+    """A successor snapshot file with VERSION still at its parent (a
+    write-audit-publish stage, or a commit that crashed before moving
+    VERSION) is this history's own: a publishing merge replaces it."""
+    staged, _ = cow.merge(_chset(spark, [(1007, -7, "U")], 2), publish=False)
+    assert cow.current_snapshot_id() == 1 and staged == 2
+    cow.merge(_chset(spark, [(1008, -8, "U")], 3))
     got = {r["k"]: r["v"] for r in cow.read().collect()}
-    assert cow.field_names() == ["k", "v"]
-    assert got == {k: k * 10 for k in range(200)}
+    assert cow.current_snapshot_id() == 2 and got[1008] == -8 and 1007 not in got
 
 
 def test_collated_string_key_is_refused(spark, tmp_path):

@@ -9,6 +9,7 @@ from hypothesis import strategies as st
 
 from nifi_processors_spark.operators.apply import ChangeApplier
 from nifi_processors_spark.operators.repo_stats import repo_file_stats, top_files_per_repo
+from nifi_processors_spark.plans.table import IceliteTable
 from nifi_processors_spark.sources.genlog import GenLogConfig, generate_change_log, write_change_log
 from nifi_processors_spark.streaming.stream import stream_apply
 
@@ -17,7 +18,7 @@ from .oracle import replay, sha256
 # ---------------- streaming ----------------
 
 
-def test_stream_apply_matches_batch(spark, tmp_path):
+def test_stream_apply_matches_batch(spark, tmp_path, monkeypatch):
     cfg = GenLogConfig(n_events=2000, n_epochs=3)
     write_change_log(spark, cfg, str(tmp_path / "cl"))
 
@@ -32,12 +33,22 @@ def test_stream_apply_matches_batch(spark, tmp_path):
     streaming = ChangeApplier(spark, str(tmp_path / "st"), str(tmp_path / "cl"),
                               str(tmp_path / "ss"), n_buckets=8,
                               views={"by_lang": (["lang"], [])}, outbox=True)
-    q = stream_apply(spark, streaming, str(tmp_path / "ckpt"))
+    # one change feed per non-empty micro-batch: the outbox computes it,
+    # the view folds the published segment (a small trigger size makes
+    # several micro-batches, so the view folds more than its bootstrap)
+    feeds, batches = [], []
+    real_changes, real_apply = IceliteTable.changes, streaming.apply_batch_df
+    monkeypatch.setattr(IceliteTable, "changes",
+                        lambda self, frm, to: feeds.append((frm, to)) or real_changes(self, frm, to))
+    streaming.apply_batch_df = lambda *a, **kw: batches.append(real_apply(*a, **kw)) or batches[-1]
+    q = stream_apply(spark, streaming, str(tmp_path / "ckpt"), max_files_per_trigger=8)
     q.awaitTermination(300)
     # availableNow terminates when all input is processed — a still-active
     # query here means the foreachBatch callback deadlocked (the silent
     # failure mode obs-in-foreachBatch used to hit); fail loudly.
     assert not q.isActive
+    assert len(batches) > 1
+    assert len(feeds) == sum(r["rows_in"] > 0 for r in batches)
     got = {
         (r["repo"], r["path"]): r["sha"]
         for r in streaming.state().select("repo", "path", F.sha2("content", 256).alias("sha")).collect()
