@@ -31,6 +31,7 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def _view_cols(value_cols: list[str], count_col: str) -> list[str]:
@@ -123,11 +124,13 @@ class MaterializedView:
 
     Layout::
 
-        path/VIEW            -> {"snapshot_id": n, "data": "gen{m}"}
+        path/VIEW            -> {"snapshot_id": n, "data": "gen{m}", "schema": {...}}
         path/gen{m}/*.parquet
 
     ``m`` is the snapshot the data was last written at: a range that
-    changed no row moves only the pointer.
+    changed no row moves only the pointer. ``schema`` is the Spark schema
+    the generation was written with, so ``read`` runs no schema-inference
+    job (a pointer written without one falls back to inference).
     """
 
     def __init__(self, spark, path: str, group_cols: list[str],
@@ -149,8 +152,10 @@ class MaterializedView:
         ptr = self.pointer()
         if ptr is None:
             raise RuntimeError(f"view at {self.path} not materialized yet")
-        return self.spark.read.parquet(
-            self._fsio.join(self.path, ptr["data"]))
+        reader = self.spark.read
+        if "schema" in ptr:
+            reader = reader.schema(T.StructType.fromJson(ptr["schema"]))
+        return reader.parquet(self._fsio.join(self.path, ptr["data"]))
 
     def refresh(self, table, feed: dict | None = None) -> dict:
         """Bring the view up to the table's current snapshot. Returns a
@@ -175,9 +180,10 @@ class MaterializedView:
                 and (feed["from_snapshot"], feed["snapshot_id"]) == (ptr["snapshot_id"], cur)):
             rec["feed"] = "outbox"
             if feed["segment"] is None:  # no row changed: same view
-                fsio.publish_json(self._ptr, {"snapshot_id": cur, "data": ptr["data"]})
+                fsio.publish_json(self._ptr, {**ptr, "snapshot_id": cur})
                 return rec
-            delta = self.spark.read.parquet(feed["segment"])
+            delta = (self.spark.read.schema(T.StructType.fromJson(feed["schema"]))
+                     .parquet(feed["segment"]))
         elif ptr is not None:
             from .table import SnapshotExpiredError
 
@@ -201,7 +207,8 @@ class MaterializedView:
                 self.group_cols, self.value_cols)
         gen = f"gen{cur}"
         new.write.mode("overwrite").parquet(fsio.join(self.path, gen))
-        fsio.publish_json(self._ptr, {"snapshot_id": cur, "data": gen})
+        fsio.publish_json(self._ptr, {"snapshot_id": cur, "data": gen,
+                                      "schema": new.schema.jsonValue()})
         self._expire_generations(keep=[gen])
         return rec
 

@@ -80,8 +80,9 @@ class ChangeOutbox:
     def publish(self, table) -> dict:
         """Bring the outbox up to the table's current snapshot. Returns
         {mode: bootstrap|noop|publish, from_snapshot, snapshot_id, rows,
-        segment}; ``segment`` is the path of the range's parquet segment,
-        or None when the range changed no row."""
+        segment, schema}; ``segment`` is the path of the range's parquet
+        segment, or None when the range changed no row, and ``schema`` its
+        Spark schema as JSON, so a reader of the segment infers nothing."""
         fsio.makedirs(self.path)
         cur = table.current_snapshot_id()
         ptr = self.pointer()
@@ -97,11 +98,8 @@ class ChangeOutbox:
                 return {"mode": "bootstrap", "snapshot_id": cur}
         else:
             frm = ptr["snapshot_id"]
-        feed = (
-            table.changes(frm, cur)
-            .withColumn("_from_snapshot", F.lit(frm))
-            .withColumn("_to_snapshot", F.lit(cur))
-        )
+        feed = table.changes(frm, cur).withColumns(
+            {"_from_snapshot": F.lit(frm), "_to_snapshot": F.lit(cur)})
         # Torn-publish repair (ADVICE r5): a crash between segment write
         # and pointer move, followed by further table commits before the
         # next publish, would otherwise leave seg_{frm}_{oldCur} on disk
@@ -124,7 +122,8 @@ class ChangeOutbox:
             seg = None
         fsio.publish_json(self._ptr, {"snapshot_id": cur})
         return {"mode": "publish", "from_snapshot": frm,
-                "snapshot_id": cur, "rows": rows, "segment": seg}
+                "snapshot_id": cur, "rows": rows, "segment": seg,
+                "schema": feed.schema.jsonValue()}
 
     def segments(self) -> list[str]:
         if not fsio.exists(self.path):

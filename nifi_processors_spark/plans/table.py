@@ -37,7 +37,7 @@ import json
 import os
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -408,43 +408,77 @@ def zorder_column(cols: list[str], ranges: dict[str, tuple[float, float]],
     return z
 
 
-def _group_head(key: list[str], w) -> Column:
-    """Head-of-key-group predicate under a (key, seq desc) sort: no previous
-    row, or ANY key part differs from it. eqNullSafe keeps the predicate
-    two-valued — with a null key column a plain != yields null, and
-    filter() would silently drop the row (data loss) instead of keeping the
-    group head. Null-key events are quarantined upstream, but the merge
-    must stay loss-free even if one slips through."""
-    prev = [F.lag(F.col(c)).over(w) for c in key]
-    head = F.lag(F.lit(1)).over(w).isNull()  # true iff no previous row
-    diff = F.lit(False)
-    for c, p in zip(key, prev):
-        diff = diff | ~p.eqNullSafe(F.col(c))
-    return head | diff
+def _q(name: str) -> str:
+    """``name`` as a backtick-quoted Spark SQL identifier (a backtick in
+    the name doubles), with braces doubled for the ``spark.sql``
+    formatter that binds a statement's DataFrame arguments."""
+    return "`" + name.replace("`", "``").replace("{", "{{").replace("}", "}}") + "`"
 
 
-def _lww_order(key: list[str], *extra: Column) -> list[Column]:
-    """The LWW comparator as a sort order: key ascending, then the greatest
-    (commit_seq, event_seq) first, then the later-written ``_delta_seq``
-    (byte-unequal ties — drift re-merge, crash replay — resolve to the
-    later write); ``extra`` appends further tie-breaks."""
-    return [
-        *[F.col(c) for c in key],
-        F.col("_commit_seq").desc(),
-        F.col("_event_seq").desc(),
-        F.col("_delta_seq").desc(),
-        *extra,
-    ]
+def _sql_type(dt: T.DataType) -> str:
+    """``dt`` as a Spark SQL type name (field names quoted), for a
+    ``CAST(NULL AS ...)`` null backfill."""
+    if isinstance(dt, T.StructType):
+        return "STRUCT<" + ", ".join(
+            f"{_q(f.name)}: {_sql_type(f.dataType)}" for f in dt.fields) + ">"
+    if isinstance(dt, T.ArrayType):
+        return f"ARRAY<{_sql_type(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"MAP<{_sql_type(dt.keyType)}, {_sql_type(dt.valueType)}>"
+    return dt.simpleString()
 
 
-def _lww_heads(df: DataFrame, key: list[str], part: str, *extra: Column) -> DataFrame:
-    """Per-key LWW winners: sort within partitions of ``part`` by
-    ``_lww_order`` and keep each key group's head. ``df`` must already be
-    distributed by ``part`` (a key lives in exactly one bucket), so the
-    resolve adds no exchange of its own and its output stays
-    bucket-clustered for a ``partitionBy`` write."""
-    w = Window.partitionBy(part).orderBy(*_lww_order(key, *extra))
-    return df.withColumn("_head", _group_head(key, w)).filter(F.col("_head")).drop("_head")
+def _bucket_sql(key: list[str], n_buckets: int) -> str:
+    """``bucket_expr`` as SQL text."""
+    return f"CAST(pmod(xxhash64({', '.join(map(_q, key))}), {int(n_buckets)}) AS INT)"
+
+
+def _lww_window(part: str, group: list[str], *extra: str) -> str:
+    """The LWW comparator as a window spec: partitions of ``part``, then
+    ``group`` ascending (the key, plus any column that splits a key's
+    rows into separate groups), the greatest (commit_seq, event_seq)
+    first, then the later-written ``_delta_seq`` (byte-unequal ties —
+    drift re-merge, crash replay — resolve to the later write);
+    ``extra`` appends further SQL tie-breaks."""
+    order = [*map(_q, group), "_commit_seq DESC", "_event_seq DESC",
+             "_delta_seq DESC", *extra]
+    return f"PARTITION BY {_q(part)} ORDER BY {', '.join(order)}"
+
+
+def _group_head(group: list[str]) -> str:
+    """Head-of-group predicate (SQL) under the statement's window ``w``,
+    ordered by ``group`` first: no previous row, or ANY group column
+    differs from it. ``<=>`` keeps the predicate two-valued — with a null
+    key column a plain ``!=`` yields null and the filter would silently
+    drop the row (data loss) instead of keeping the group head. Null-key
+    events are quarantined upstream, but the merge must stay loss-free
+    even if one slips through."""
+    diff = " OR ".join(f"NOT (lag({c}) OVER w <=> {c})" for c in map(_q, group))
+    return f"(lag(1) OVER w IS NULL OR {diff})"
+
+
+def _remap(to_fields: list[dict], from_by_id: dict[int, dict]) -> str:
+    """SQL select list projecting rows written under one schema into
+    ``to_fields``' names by field id: a renamed column lines up with its
+    new name, a column added later reads as a typed null."""
+    return ", ".join(
+        (_q(from_by_id[f["id"]]["name"]) if f["id"] in from_by_id
+         else f"CAST(NULL AS {_sql_type(_type_from_json(f['type']))})")
+        + f" AS {_q(f['name'])}"
+        for f in to_fields)
+
+
+def _lww_heads(df: DataFrame, key: list[str], part: str, *extra: str) -> DataFrame:
+    """Per-key LWW winners: sort within partitions of ``part`` by the
+    ``_lww_window`` order and keep each key group's head, in one
+    statement. ``df`` must already be distributed by ``part`` (a key
+    lives in exactly one bucket), so the resolve adds no exchange of its
+    own and its output stays bucket-clustered for a ``partitionBy``
+    write."""
+    return df.sparkSession.sql(
+        f"SELECT * EXCEPT (_head) FROM (SELECT *, {_group_head(key)} AS _head "
+        f"FROM {{df}} WINDOW w AS ({_lww_window(part, key, *extra)})) WHERE _head",
+        df=df)
 
 
 def _replace_buckets(buckets: dict, affected: list, written: dict) -> dict:
@@ -704,12 +738,21 @@ class IceliteTable:
         resolve: bool = True,
     ) -> DataFrame:
         """``read`` of an already-loaded snapshot; ``keep`` replaces the
-        snapshot's bucket->files map (the files a scan kept)."""
+        snapshot's bucket->files map (the files a scan kept).
+
+        One explicit-schema parquet read per schema version, then ONE SQL
+        statement over them: each version's columns remapped to the
+        current names by field id (null backfill for later-added
+        columns), ``UNION ALL``, and — when delta files are present and
+        ``resolve`` — the per-key LWW resolve: ``DISTRIBUTE BY`` the
+        bucket (one exchange) and one window over the LWW order whose
+        ``lag`` finds each key group's head; then the tombstone filter
+        unless ``include_deleted``. ``resolve=False`` (compact, changes)
+        hands the raw base∪delta rows to a caller that fuses the resolve
+        into its own bucket shuffle. Building the plan as one statement
+        costs a few dozen driver round trips instead of hundreds."""
         cur_fields = snap["schemas"][str(snap["schema_version"])]
-        out_schema = T.StructType(
-            [T.StructField(f["name"], _type_from_json(f["type"]), True) for f in cur_fields]
-            + [T.StructField(c, _SYS_TYPES[c], True) for c in SYS_COLS]
-        )
+        sys_cols = [c for c in SYS_COLS if include_deleted or c != "_deleted"]
         # group files by the schema version they were written under
         by_ver: dict[str, list[str]] = {}
         has_delta = False
@@ -721,8 +764,11 @@ class IceliteTable:
                 if fe.get("kind", "base") == "delta":
                     has_delta = True
         if not by_ver:
-            return self.spark.createDataFrame([], out_schema)
-        parts: list[DataFrame] = []
+            return self.spark.createDataFrame([], T.StructType(
+                self.schema(snap).fields
+                + [T.StructField(c, _SYS_TYPES[c], True) for c in sys_cols]))
+        frames: dict[str, DataFrame] = {}
+        selects: list[str] = []
         for ver, paths in by_ver.items():
             file_fields = {f["id"]: f for f in snap["schemas"][ver]}
             # Explicit reader schema (r06): the manifest RECORDS the exact
@@ -738,28 +784,25 @@ class IceliteTable:
                 ]
                 + [T.StructField(c, _SYS_TYPES[c], True) for c in SYS_COLS]
             )
-            df = self.spark.read.schema(file_schema).parquet(*paths)
-            cols = []
-            for f in cur_fields:
-                ff = file_fields.get(f["id"])
-                if ff is not None:
-                    cols.append(F.col(ff["name"]).alias(f["name"]))
-                else:  # column added after these files were written -> null backfill
-                    cols.append(F.lit(None).cast(_type_from_json(f["type"])).alias(f["name"]))
-            cols += [F.col(c) for c in SYS_COLS]
-            parts.append(df.select(*cols))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+            name = f"p{len(frames)}"
+            frames[name] = self.spark.read.schema(file_schema).parquet(*paths)
+            selects.append(
+                f"SELECT {_remap(cur_fields, file_fields)}, {', '.join(SYS_COLS)} "
+                f"FROM {{{name}}}")
+        rows = " UNION ALL ".join(selects)
+        cols = [_q(f["name"]) for f in cur_fields] + sys_cols
+        live = [] if include_deleted else ["NOT coalesce(_deleted, false)"]
         if has_delta and resolve:
             # merge-on-read: unresolved delta rows present — resolve per-key
-            # LWW now (one bucket-shuffle + sort, same shape as the merge).
-            # ``resolve=False`` (compact) hands the raw base∪delta rows to
-            # a caller that fuses the resolve into its own bucket shuffle.
-            out = _resolve_lww(out, snap["key"], snap["n_buckets"])
-        if not include_deleted:
-            out = out.filter(~F.coalesce(F.col("_deleted"), F.lit(False))).drop("_deleted")
-        return out
+            # LWW now (one bucket-shuffle + sort, same shape as the merge)
+            key = snap["key"]
+            rows = (f"SELECT *, {_group_head(key)} AS _head FROM ("
+                    f"SELECT *, {_bucket_sql(key, snap['n_buckets'])} AS _rb "
+                    f"FROM ({rows}) DISTRIBUTE BY _rb) "
+                    f"WINDOW w AS ({_lww_window('_rb', key)})")
+            live.insert(0, "_head")
+        where = f" WHERE {' AND '.join(live)}" if live else ""
+        return self.spark.sql(f"SELECT {', '.join(cols)} FROM ({rows}){where}", **frames)
 
     # ---------------- stats-pruned scan (file skipping) ----------------
 
@@ -929,18 +972,21 @@ class IceliteTable:
         snap = self.snapshot(snapshot_id)
         kept, _ = self._prune(snap, filters)
         df = self._read(snap, include_deleted=include_deleted, keep=kept)
-        pred = F.lit(True)
+        # the residual predicate as one statement, literals bound as named
+        # parameters (a Column expression tree costs a round trip per node)
+        conds, args = [], {}
         for c, op, v in filters:
-            col = F.col(c)
+            marks = []
+            for x in (v if op == "in" else [v]):
+                marks.append(f":p{len(args)}")
+                args[f"p{len(args)}"] = x
             if op == "in":
-                pred = pred & col.isin(list(v))
-                continue
-            pred = pred & {
-                "=": col == F.lit(v), "==": col == F.lit(v),
-                "<": col < F.lit(v), "<=": col <= F.lit(v),
-                ">": col > F.lit(v), ">=": col >= F.lit(v),
-            }[op]
-        return df.filter(pred)
+                conds.append(f"{_q(c)} IN ({', '.join(marks)})" if marks else "false")
+            else:
+                conds.append(f"{_q(c)} {'=' if op == '==' else op} {marks[0]}")
+        return self.spark.sql(
+            f"SELECT * FROM {{df}} WHERE {' AND '.join(conds) or 'true'}",
+            args=args, df=df)
 
     def scan_report(self, filters: list[tuple[str, str, Any]],
                     snapshot_id: int | None = None) -> dict:
@@ -1006,30 +1052,26 @@ class IceliteTable:
         bucket files, so any bucket whose file-entry list is identical in
         both snapshots cannot contain a change and is never read (a merge
         rewrites only touched buckets; at 100 TB the feed's input is the
-        touched fraction, not the table). The pruned sides then meet in
-        ONE full-outer join on the key (both sides are bucket-clustered
-        on that very key — on a bucketed catalog this exchange
-        disappears), and the per-key verdict fans out through a single
-        filter+explode projection: one join, one pass, never recomputed
-        per change type. Unchanged keys yield an empty array and vanish
-        in the explode.
+        touched fraction, not the table). The raw rows of both pruned
+        sides (``_read(resolve=False)``) meet in ONE statement with ONE
+        exchange and no join: tagged ``_side`` 0/1, they are distributed
+        by bucket once; window 1, ordered by (key, side, LWW order),
+        keeps the head of each (key, side) minus tombstones; window 2,
+        partitioned by (bucket, key) and ordered by side — a prefix of
+        window 1's order, so no second sort — pairs the two heads with
+        ``lead``/``lag`` of a struct of the data columns, and one
+        ``CASE`` names the change. Unchanged keys drop out in a filter.
 
         Tombstoned keys are user-invisible (``read`` default), so a key
         deleted between the snapshots surfaces as ``delete`` and a
         tombstone-then-reinserted key as ``insert``."""
-        from functools import reduce as _reduce
-
         snap_f = self.snapshot(from_snapshot_id)
         snap_t = self.snapshot(to_snapshot_id)
         key = snap_t["key"]
         if snap_f["key"] != key:
             raise ValueError(f"key changed between snapshots: {snap_f['key']} vs {key}")
         t_fields = snap_t["schemas"][str(snap_t["schema_version"])]
-        names = [f["name"] for f in t_fields]
-        out_schema = T.StructType(
-            [T.StructField(f["name"], _type_from_json(f["type"]), True) for f in t_fields]
-            + [T.StructField("_change_type", T.StringType(), False)]
-        )
+        f_fields = snap_f["schemas"][str(snap_f["schema_version"])]
 
         buckets: list[int] | None = None
         if snap_f["n_buckets"] == snap_t["n_buckets"]:
@@ -1038,59 +1080,43 @@ class IceliteTable:
                 int(b) for b in every
                 if snap_f["buckets"].get(b) != snap_t["buckets"].get(b)
             )
-            if not buckets:
-                return self.spark.createDataFrame([], out_schema)
         # else: rebucket between the snapshots — layouts aren't comparable,
         # fall through to a full read of both sides
 
-        # FROM side projected into the TO namespace by field id
-        f_by_id = {f["id"]: f for f in snap_f["schemas"][str(snap_f["schema_version"])]}
-        old_cols = []
-        for f in t_fields:
-            ff = f_by_id.get(f["id"])
-            if ff is not None:
-                old_cols.append(F.col(ff["name"]).alias(f["name"]))
-            else:
-                old_cols.append(F.lit(None).cast(_type_from_json(f["type"])).alias(f["name"]))
-        old = (
-            self._read(snap_f, buckets)
-            .select(*old_cols)
-            .select(*[F.col(c).alias(f"_o_{c}") for c in names])
-        )
-        new = (
-            self._read(snap_t, buckets)
-            .select(*[F.col(c).alias(f"_n_{c}") for c in names])
-        )
-
-        in_old = _reduce(lambda a, b: a & b, [F.col(f"_o_{k}").isNotNull() for k in key])
-        in_new = _reduce(lambda a, b: a & b, [F.col(f"_n_{k}").isNotNull() for k in key])
-        data = [c for c in names if c not in key]
-        differs = _reduce(
-            lambda a, b: a | b,
-            [~F.col(f"_o_{c}").eqNullSafe(F.col(f"_n_{c}")) for c in data],
-            F.lit(False),
-        )
-
-        def img(side: str, tag: str) -> Column:
-            return F.struct(
-                *[F.col(f"_{side}_{c}").alias(c) for c in names],
-                F.lit(tag).alias("_change_type"),
-            )
-
-        verdict = F.array(
-            F.when(~in_old, img("n", "insert")),
-            F.when(in_old & ~in_new, img("o", "delete")),
-            F.when(in_old & in_new & differs, img("o", "update_preimage")),
-            F.when(in_old & in_new & differs, img("n", "update_postimage")),
-        )
-        joined = old.join(
-            new, [F.col(f"_o_{k}") == F.col(f"_n_{k}") for k in key], "full_outer"
-        )
-        return (
-            joined.select(
-                F.explode(F.filter(verdict, lambda x: x.isNotNull())).alias("_chg")
-            ).select("_chg.*")
-        )
+        old = self._read(snap_f, buckets, include_deleted=True, resolve=False)
+        new = self._read(snap_t, buckets, include_deleted=True, resolve=False)
+        names = [_q(f["name"]) for f in t_fields]
+        data = [_q(f["name"]) for f in t_fields if f["name"] not in key]
+        sys_cols = ", ".join(SYS_COLS)
+        # each live head's data columns; ``_s`` keeps the struct non-empty
+        # on a key-only table. ``_p``, the other side's head of the same
+        # key, is null iff the key is live on one side only.
+        img = ", ".join(["'_s', _side", *(f"'_c{i}', {c}" for i, c in enumerate(data))])
+        differs = " OR ".join(
+            f"NOT (_p._c{i} <=> {c})" for i, c in enumerate(data)) or "false"
+        by_key = ", ".join(["_b", *map(_q, key)])
+        return self.spark.sql(
+            f"""SELECT {', '.join(names)},
+                CASE WHEN _p IS NULL THEN IF(_side = 1, 'insert', 'delete')
+                     WHEN _side = 0 THEN 'update_preimage'
+                     ELSE 'update_postimage' END AS _change_type
+            FROM (
+              SELECT *, CASE WHEN _side = 0 THEN lead(_img) OVER v
+                             ELSE lag(_img) OVER v END AS _p
+              FROM (
+                SELECT *, named_struct({img}) AS _img FROM (
+                  SELECT *, {_group_head([*key, '_side'])} AS _head FROM (
+                    SELECT *, {_bucket_sql(key, snap_t['n_buckets'])} AS _b FROM (
+                      SELECT {_remap(t_fields, {f['id']: f for f in f_fields})},
+                             {sys_cols}, 0 AS _side FROM {{old}}
+                      UNION ALL
+                      SELECT {', '.join(names)}, {sys_cols}, 1 AS _side FROM {{new}}
+                    ) DISTRIBUTE BY _b
+                  ) WINDOW w AS ({_lww_window('_b', [*key, '_side'])})
+                ) WHERE _head AND NOT coalesce(_deleted, false)
+              ) WINDOW v AS (PARTITION BY {by_key} ORDER BY _side)
+            ) WHERE _p IS NULL OR {differs}""",
+            old=old, new=new)
 
     # ---------------- ALTER (schema evolution, no data rewrite) ----------------
 
@@ -1226,8 +1252,8 @@ class IceliteTable:
         # two full exchanges of the table per compaction. Instead take the
         # raw base∪delta rows, distribute by bucket ONCE, sort within
         # partitions by (key, seq desc) and keep each key group's head —
-        # byte-identical winners (the same _lww_heads as _resolve_lww), half
-        # the data movement.
+        # byte-identical winners (the same LWW window as read()), half the
+        # data movement.
         raw = self._read(snap, buckets, include_deleted=True, resolve=False)
         resolved = _lww_heads(
             raw.withColumn("_bucket", bucket_expr(key, snap["n_buckets"]))
@@ -1412,7 +1438,7 @@ class IceliteTable:
         # carry the delete's sequence so older late events cannot win later.
         survivors = _lww_heads(
             unioned.repartition(self._merge_partitions(len(affected)), F.col("_bucket")),
-            key, "_bucket", F.col("_is_change").desc(),
+            key, "_bucket", "_is_change DESC",
         ).select(*data_cols, *SYS_COLS, "_bucket")
         written = self._write_buckets(survivors, snap)
         self._commit_next(
@@ -1617,15 +1643,6 @@ def _delta_buckets(snap: dict, min_deltas: int) -> list[int]:
         int(b) for b, files in snap["buckets"].items()
         if sum(1 for fe in files if fe.get("kind", "base") == "delta") >= min_deltas
     )
-
-
-def _resolve_lww(df: DataFrame, key: list[str], n_buckets: int) -> DataFrame:
-    """Per-key LWW winner across unresolved rows: one bucket-distribution
-    shuffle + sort-within-partitions + lag head-of-group (same shape as the
-    CoW merge; byte-unequal ties — drift re-merge, crash replay — resolve
-    to the later _delta_seq)."""
-    with_b = df.withColumn("_rb", bucket_expr(key, n_buckets)).repartition(F.col("_rb"))
-    return _lww_heads(with_b, key, "_rb").select(*df.columns)
 
 
 def _type_from_json(tj: str) -> T.DataType:
