@@ -116,7 +116,6 @@ class ChangeApplier:
         state_dir: str,
         n_buckets: int = 32,
         rename_hints: dict[str, str] | None = None,
-        collect_metrics: bool = True,
         merge_mode: str = "cow",
         compact_every: int | None = None,
         expire_snapshots_every: int | None = None,
@@ -163,7 +162,6 @@ class ChangeApplier:
         )
         self.quarantine_dir = fsio.join(state_dir, "quarantine")
         self.n_buckets = n_buckets
-        self.collect_metrics = collect_metrics
         if merge_mode not in ("cow", "mor"):
             raise ValueError(f"merge_mode must be 'cow' or 'mor', got {merge_mode!r}")
         self.merge_mode = merge_mode
@@ -357,8 +355,7 @@ class ChangeApplier:
                     "replay, and applying it could resurrect deleted "
                     "rows. Raise tombstone_lateness above the stream's "
                     "real disorder, or rebuild the table from the full "
-                    "changelog. (Appliers with collect_metrics=False "
-                    "cannot corroborate replays and always refuse.)"
+                    "changelog."
                 )
             return True
         if lo is not None and lo < wm:
@@ -539,8 +536,7 @@ class ChangeApplier:
             # tombstone-expiry watermark in maintain() without replaying
             "max_commit_seq": self._max_commit_seq,
         }
-        if self.collect_metrics:
-            self.metrics.append(rec)
+        self.metrics.append(rec)
         done = {"snapshot_id": ep.sid}
         if stale:
             done["skipped_stale"] = True

@@ -32,9 +32,6 @@ class RuleConfigTracker:
             default={"config_epoch": 0, "path": None, "mtime": None, "sha256": None},
         )
 
-    def current_epoch(self) -> int:
-        return self._state()["config_epoch"]
-
     def load(self, zip_path: str) -> tuple[dict[str, Any], int, bool]:
         """Return (spec, config_epoch, changed). Re-parses and bumps the
         epoch only when the artifact differs from the recorded state

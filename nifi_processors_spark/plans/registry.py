@@ -151,17 +151,12 @@ def payload_schema_agg(payload_json: F.Column) -> F.Column:
     return F.schema_of_variant_agg(F.try_parse_json(payload_json))
 
 
-def detect_payload_schema(epoch_df: DataFrame, sample: int | None = None) -> list[tuple[str, str]]:
+def detect_payload_schema(epoch_df: DataFrame) -> list[tuple[str, str]]:
     """Detect the payload schema over the WHOLE epoch with one distributed
     aggregation (no driver-side row sample — a v2 payload appearing
-    mid-epoch is never missed, and replays are deterministic).
-    ``sample`` is accepted for API compat and ignored."""
+    mid-epoch is never missed, and replays are deterministic)."""
     row = epoch_df.select(payload_schema_agg(F.col("payload_json")).alias("s")).first()
     return fields_from_variant_schema(row["s"] if row else None)
-
-
-def to_struct(fields: list[tuple[str, str]]) -> T.StructType:
-    return T.StructType([T.StructField(n, _SPARK_TYPE[t], True) for n, t in fields])
 
 
 def diff_schemas(

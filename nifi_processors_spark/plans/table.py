@@ -433,15 +433,16 @@ def _bucket_sql(key: list[str], n_buckets: int) -> str:
     return f"CAST(pmod(xxhash64({', '.join(map(_q, key))}), {int(n_buckets)}) AS INT)"
 
 
-def _lww_window(part: str, group: list[str], *extra: str) -> str:
+def _lww_window(part: str, group: list[str]) -> str:
     """The LWW comparator as a window spec: partitions of ``part``, then
     ``group`` ascending (the key, plus any column that splits a key's
     rows into separate groups), the greatest (commit_seq, event_seq)
     first, then the later-written ``_delta_seq`` (byte-unequal ties —
-    drift re-merge, crash replay — resolve to the later write);
-    ``extra`` appends further SQL tie-breaks."""
+    drift re-merge, crash replay — resolve to the later write; a merge's
+    change rows carry the successor snapshot's id, above every stored
+    row's, so they win such a tie against the table)."""
     order = [*map(_q, group), "_commit_seq DESC", "_event_seq DESC",
-             "_delta_seq DESC", *extra]
+             "_delta_seq DESC"]
     return f"PARTITION BY {_q(part)} ORDER BY {', '.join(order)}"
 
 
@@ -468,7 +469,7 @@ def _remap(to_fields: list[dict], from_by_id: dict[int, dict]) -> str:
         for f in to_fields)
 
 
-def _lww_heads(df: DataFrame, key: list[str], part: str, *extra: str) -> DataFrame:
+def _lww_heads(df: DataFrame, key: list[str], part: str) -> DataFrame:
     """Per-key LWW winners: sort within partitions of ``part`` by the
     ``_lww_window`` order and keep each key group's head, in one
     statement. ``df`` must already be distributed by ``part`` (a key
@@ -477,8 +478,21 @@ def _lww_heads(df: DataFrame, key: list[str], part: str, *extra: str) -> DataFra
     write."""
     return df.sparkSession.sql(
         f"SELECT * EXCEPT (_head) FROM (SELECT *, {_group_head(key)} AS _head "
-        f"FROM {{df}} WINDOW w AS ({_lww_window(part, key, *extra)})) WHERE _head",
+        f"FROM {{df}} WINDOW w AS ({_lww_window(part, key)})) WHERE _head",
         df=df)
+
+
+def _change_rows(changes: DataFrame, data_cols: list[str], sid: int) -> DataFrame:
+    """A change-set (``data_cols`` + ``op``, ``commit_seq``,
+    ``event_seq``) as rows written by snapshot ``sid``: the system
+    columns in ``SYS_COLS`` order, ``_deleted`` for an ``op='D'``."""
+    return changes.select(
+        *[F.col(c) for c in data_cols],
+        F.col("commit_seq").alias("_commit_seq"),
+        F.col("event_seq").alias("_event_seq"),
+        F.lit(sid).cast("long").alias("_delta_seq"),
+        (F.col("op") == "D").alias("_deleted"),
+    )
 
 
 def _replace_buckets(buckets: dict, affected: list, written: dict) -> dict:
@@ -576,6 +590,23 @@ class IceliteTable:
         rarely binds (n_affected >> cores) and per-task sort state stays
         bounded by the buckets a task owns."""
         return max(1, min(n_affected, self.spark.sparkContext.defaultParallelism))
+
+    def _bucketed(self, rows: DataFrame, key: list[str], n_buckets: int,
+                  n_affected: int, resolve: bool = True) -> DataFrame:
+        """The one bucket shuffle of every table write: ``rows`` (data
+        columns + ``SYS_COLS``) tagged with ``_bucket`` under
+        ``n_buckets``, repartitioned once by it to
+        ``_merge_partitions(n_affected)`` tasks and, with ``resolve``, cut
+        to each key's LWW head (``_lww_heads``). A key lives in one
+        bucket, so the resolve adds no exchange and its output is already
+        clustered for the ``partitionBy`` write. Rewrites hand in RAW
+        base ∪ delta rows (``_read(resolve=False)``; a CoW merge adds its
+        change rows): bucketing an already resolved read would shuffle
+        every row twice. ``resolve=False`` (the delta append, an external
+        ``overwrite``) only buckets."""
+        df = rows.withColumn("_bucket", bucket_expr(key, n_buckets)).repartition(
+            self._merge_partitions(n_affected), F.col("_bucket"))
+        return _lww_heads(df, key, "_bucket") if resolve else df
 
     def _file_entry(self, path: str, snap: dict, kind: str | None = None) -> dict:
         """Manifest entry for a file freshly written on top of ``snap``:
@@ -747,10 +778,11 @@ class IceliteTable:
         ``resolve`` — the per-key LWW resolve: ``DISTRIBUTE BY`` the
         bucket (one exchange) and one window over the LWW order whose
         ``lag`` finds each key group's head; then the tombstone filter
-        unless ``include_deleted``. ``resolve=False`` (compact, changes)
-        hands the raw base∪delta rows to a caller that fuses the resolve
-        into its own bucket shuffle. Building the plan as one statement
-        costs a few dozen driver round trips instead of hundreds."""
+        unless ``include_deleted``. ``resolve=False`` (every rewrite via
+        ``_bucketed``, and ``changes``) hands the raw base∪delta rows to a
+        caller that fuses the resolve into its own bucket shuffle.
+        Building the plan as one statement costs a few dozen driver round
+        trips instead of hundreds."""
         cur_fields = snap["schemas"][str(snap["schema_version"])]
         sys_cols = [c for c in SYS_COLS if include_deleted or c != "_deleted"]
         # group files by the schema version they were written under
@@ -1176,24 +1208,13 @@ class IceliteTable:
         (as for ``merge``).
         """
         snap = snap or self.snapshot()
-        key, nb = snap["key"], snap["n_buckets"]
-        data_cols = self.field_names(snap)
-        ch = changes.withColumn("_bucket", bucket_expr(key, nb))
         if affected is not None and not affected:
             return snap["snapshot_id"], {"affected_buckets": 0}
-        width = self._merge_partitions(nb if affected is None else len(affected))
-
-        new_sid = snap["snapshot_id"] + 1
-        delta = ch.select(
-            *[F.col(c) for c in data_cols],
-            F.col("commit_seq").alias("_commit_seq"),
-            F.col("event_seq").alias("_event_seq"),
-            F.lit(new_sid).cast("long").alias("_delta_seq"),
-            (F.col("op") == "D").alias("_deleted"),
-            F.col("_bucket"),
-        )
-        written = self._write_buckets(
-            delta.repartition(width, F.col("_bucket")), snap, kind="delta")
+        nb, new_sid = snap["n_buckets"], snap["snapshot_id"] + 1
+        delta = self._bucketed(
+            _change_rows(changes, self.field_names(snap), new_sid), snap["key"], nb,
+            nb if affected is None else len(affected), resolve=False)
+        written = self._write_buckets(delta, snap, kind="delta")
         if not written:  # empty change-set discovered post-write
             return snap["snapshot_id"], {"affected_buckets": 0}
         old = snap["buckets"]
@@ -1233,34 +1254,23 @@ class IceliteTable:
           * ``buckets``: explicit bucket ids to compact;
           * ``min_deltas``: compact buckets with at least that many delta
             files (the maintenance-loop default);
-          * neither: full compaction (bootstrap / small tables).
+          * neither: full compaction (bootstrap / small tables) — the
+            scoped path over every bucket, so the manifest lists them all.
         Untouched buckets keep their existing data files byte-for-byte.
+        One exchange: the raw base ∪ delta rows of the scope go through
+        ``_bucketed``, which resolves LWW inside the bucket shuffle of the
+        write.
         """
         snap = self.snapshot()
         if buckets is None and min_deltas is not None:
             buckets = _delta_buckets(snap, min_deltas)
         if buckets is None:
-            resolved = self._read(snap, include_deleted=True)
-            return self.overwrite(resolved, lineage or {"op": "compact"}, snap=snap)
+            buckets, lineage = range(snap["n_buckets"]), lineage or {"op": "compact"}
         if not buckets:
             return snap["snapshot_id"]
-        key = snap["key"]
-        # Fused resolve+write (r06, guide §2.4 "two operations keyed the
-        # same way can share one exchange"): read() would resolve LWW with
-        # its own bucket shuffle and this method then re-shuffled the
-        # resolved rows on the SAME bucket value for the clustered write —
-        # two full exchanges of the table per compaction. Instead take the
-        # raw base∪delta rows, distribute by bucket ONCE, sort within
-        # partitions by (key, seq desc) and keep each key group's head —
-        # byte-identical winners (the same LWW window as read()), half the
-        # data movement.
         raw = self._read(snap, buckets, include_deleted=True, resolve=False)
-        resolved = _lww_heads(
-            raw.withColumn("_bucket", bucket_expr(key, snap["n_buckets"]))
-            .repartition(self._merge_partitions(len(buckets)), F.col("_bucket")),
-            key, "_bucket",
-        )
-        written = self._write_buckets(resolved, snap)
+        written = self._write_buckets(
+            self._bucketed(raw, snap["key"], snap["n_buckets"], len(buckets)), snap)
         return self._commit_next(
             snap, _replace_buckets(snap["buckets"], buckets, written),
             lineage or {"op": "compact", "buckets": buckets},
@@ -1306,10 +1316,11 @@ class IceliteTable:
         carry tight, nearly disjoint min/max ranges on the sort columns —
         exactly what ``scan()``'s manifest-stats pruning needs: after
         clustering on a query column, a selective range scan opens the
-        matching files, not the bucket. One exchange (the same
-        bucket-distribution the merge uses) + a sort-within-partitions;
-        bucket membership (hash of key) is untouched, so merges keep
-        working and the rewrite never moves a key across buckets.
+        matching files, not the bucket. One exchange (``_bucketed``: the
+        bucket shuffle of the write, resolving LWW on the way) + a
+        sort-within-partitions; bucket membership (hash of key) is
+        untouched, so merges keep working and the rewrite never moves a
+        key across buckets.
 
         Like full ``compact()`` this rewrites the table (resolving any
         delta files on the way — clustered buckets are base-only, which
@@ -1321,11 +1332,12 @@ class IceliteTable:
         if max_rows_per_file is not None and max_rows_per_file < 1:
             raise ValueError(f"max_rows_per_file must be >= 1, got {max_rows_per_file}")
         snap = self.snapshot()
-        key, nb = snap["key"], snap["n_buckets"]
         non_empty = [b for b, fs in snap["buckets"].items() if fs]
         if not non_empty:
             return snap["snapshot_id"]
-        resolved = self._read(snap, include_deleted=True)
+        resolved = self._bucketed(
+            self._read(snap, include_deleted=True, resolve=False),
+            snap["key"], snap["n_buckets"], len(non_empty))
         order: list = ["_bucket", *sort_cols]
         if zorder:
             # true multi-dim clustering: sort by the Morton interleave so
@@ -1349,16 +1361,12 @@ class IceliteTable:
             resolved = resolved.withColumn(
                 "_z", zorder_column(sort_cols, ranges, bits=zorder_bits))
             order = ["_bucket", "_z"]
-        clustered = (
-            resolved.withColumn("_bucket", bucket_expr(key, nb))
-            .repartition(self._merge_partitions(len(non_empty)), F.col("_bucket"))
-            .sortWithinPartitions(*order)
-        )
+        clustered = resolved.sortWithinPartitions(*order)
         if zorder:
             clustered = clustered.drop("_z")
         written = self._write_buckets(clustered, snap, max_rows_per_file=max_rows_per_file)
         return self._commit_next(
-            snap, {**{b: [] for b in snap["buckets"]}, **written},
+            snap, _replace_buckets(snap["buckets"], non_empty, written),
             lineage or {"op": "cluster", "sort_cols": list(sort_cols), "zorder": bool(zorder)},
             clustered_by=list(sort_cols),
             zordered=bool(zorder),
@@ -1382,8 +1390,19 @@ class IceliteTable:
 
         A change wins its key iff its (commit_seq, event_seq) >= the stored
         row's — so replays are byte-identical no-ops and cross-epoch
-        out-of-order events cannot regress state. op='D' winners become
-        tombstones (hidden rows) so older late events cannot resurrect keys.
+        out-of-order events cannot regress state; on an equal sequence the
+        change's ``_delta_seq`` (this commit's id, above every stored
+        row's) decides, so a drift re-merge's re-typed row replaces its
+        stored copy. op='D' winners become tombstones (hidden rows) so
+        older late events cannot resurrect keys.
+
+        One exchange: the raw rows of the affected buckets (base and any
+        MOR deltas, unresolved) and the change rows go through
+        ``_bucketed`` together — distributed by bucket (a key lives in
+        exactly one), sorted within partitions by (key, seq desc), and cut
+        to each key's head, already bucket-clustered for the write. The
+        winner is kept even when it is a delete: tombstones carry the
+        delete's sequence so older late events cannot win later.
 
         ``affected`` (bucket ids the change-set touches) can be passed by a
         caller that already aggregated per-bucket stats, saving one job.
@@ -1401,46 +1420,18 @@ class IceliteTable:
         on exactly that snapshot.
         """
         snap = snap or self.snapshot()
-        key = snap["key"]
-        data_cols = self.field_names(snap)
-        bexpr = bucket_expr(key, snap["n_buckets"])
-
-        ch = changes.withColumn("_bucket", bexpr)
+        key, nb = snap["key"], snap["n_buckets"]
         if affected is None:
             # small driver-side list (<= n_buckets) — determines the CoW scope
-            affected = sorted(r["_bucket"] for r in ch.select("_bucket").distinct().collect())
+            affected = sorted(r["_bucket"] for r in changes.select(
+                bucket_expr(key, nb).alias("_bucket")).distinct().collect())
         if not affected:
             return snap["snapshot_id"], {"affected_buckets": 0, "rows_written": 0}
 
-        old = (
-            self._read(snap, affected, include_deleted=True)
-            .withColumn("_bucket", bexpr)
-            .withColumn("_is_change", F.lit(0))
-        )
         new_sid = snap["snapshot_id"] + 1
-        chn = ch.select(
-            *[F.col(c) for c in data_cols],
-            F.col("commit_seq").alias("_commit_seq"),
-            F.col("event_seq").alias("_event_seq"),
-            F.lit(new_sid).cast("long").alias("_delta_seq"),
-            (F.col("op") == "D").alias("_deleted"),
-            F.col("_bucket"),
-            F.lit(1).alias("_is_change"),
-        )
-        unioned = old.unionByName(chn)
-        # ONE shuffle total: distribute by bucket (a key lives in exactly one
-        # bucket), sort within partitions by (key, seq desc), and keep the
-        # first row of each key group — per-key LWW without a second
-        # exchange, and the output is already bucket-clustered for the
-        # partitionBy write. (A window partitioned by the full key would
-        # shuffle on key and then AGAIN on bucket — 2x the data movement.)
-        # The per-key winner is kept even when it is a delete: tombstones
-        # carry the delete's sequence so older late events cannot win later.
-        survivors = _lww_heads(
-            unioned.repartition(self._merge_partitions(len(affected)), F.col("_bucket")),
-            key, "_bucket", "_is_change DESC",
-        ).select(*data_cols, *SYS_COLS, "_bucket")
-        written = self._write_buckets(survivors, snap)
+        rows = self._read(snap, affected, include_deleted=True, resolve=False).unionByName(
+            _change_rows(changes, self.field_names(snap), new_sid))
+        written = self._write_buckets(self._bucketed(rows, key, nb, len(affected)), snap)
         self._commit_next(
             snap, _replace_buckets(snap["buckets"], affected, written),
             lineage or {"op": "merge"}, publish=publish,
@@ -1489,6 +1480,9 @@ class IceliteTable:
         """Compaction: drop tombstones with _commit_seq < min_commit_seq (a
         lateness watermark no in-flight event can precede). Bounds tombstone
         growth on a long-running table; full-table rewrite, run rarely.
+        One exchange: the raw rows go through ``_bucketed`` and the filter
+        runs on the resolved heads, so no older version of an expired
+        key can surface in its place.
 
         The watermark is RECORDED in table metadata (and carried forward by
         every later snapshot): once a masking tombstone is gone, applying an
@@ -1496,64 +1490,59 @@ class IceliteTable:
         apply loop's staleness guard uses this value to skip or refuse such
         events loudly instead of silently diverging."""
         snap = self.snapshot()
-        live = self._read(snap, include_deleted=True).filter(
-            ~F.col("_deleted") | (F.col("_commit_seq") >= min_commit_seq)
-        )
+        nb = snap["n_buckets"]
+        live = self._bucketed(
+            self._read(snap, include_deleted=True, resolve=False), snap["key"], nb, nb,
+        ).filter(~F.col("_deleted") | (F.col("_commit_seq") >= min_commit_seq))
         prev = snap.get("tombstone_watermark")
         wm = min_commit_seq if prev is None else max(prev, min_commit_seq)
-        return self.overwrite(
-            live,
+        return self._commit_next(
+            snap, _replace_buckets(snap["buckets"], range(nb), self._write_buckets(live, snap)),
             lineage or {"op": "expire_tombstones", "watermark": min_commit_seq},
-            extra_meta={"tombstone_watermark": wm},
-            snap=snap,
+            tombstone_watermark=wm,
         )
 
     def rebucket(self, n_buckets: int, lineage: dict | None = None) -> int:
         """Change the bucket count with ONE clustered full rewrite — the
         resize path when a table outgrows (or over-provisioned) its bucket
         layout; at 100 TB the bucket count is a capacity knob, not a
-        birth-time constant. Tombstones and every system column survive
-        (the rewrite reads ``include_deleted=True``, resolving any MOR
-        deltas on the way), and time travel still works: each snapshot
-        records its own ``n_buckets``, so pre-rebucket reads resolve with
-        the old layout. The apply loop picks the new count up from the
-        snapshot on its next epoch — no applier restart needed."""
+        birth-time constant. One exchange: the raw rows (tombstones and
+        MOR deltas included) go through ``_bucketed`` under the new count,
+        which resolves LWW on the way — a key's versions share a bucket
+        under any count. Every system column survives, and time travel
+        still works: each snapshot records its own ``n_buckets``, so
+        pre-rebucket reads resolve with the old layout. The apply loop
+        picks the new count up from the snapshot on its next epoch — no
+        applier restart needed."""
         snap = self.snapshot()
         if n_buckets == snap["n_buckets"]:
             return snap["snapshot_id"]
         if n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-        return self.overwrite(
-            self._read(snap, include_deleted=True),
+        heads = self._bucketed(self._read(snap, include_deleted=True, resolve=False),
+                               snap["key"], n_buckets, n_buckets)
+        return self._commit_next(
+            snap, _replace_buckets({}, range(n_buckets), self._write_buckets(heads, snap)),
             lineage or {"op": "rebucket", "from": snap["n_buckets"], "to": n_buckets},
             n_buckets=n_buckets,
-            snap=snap,
         )
 
-    def overwrite(self, df: DataFrame, lineage: dict | None = None,
-                  extra_meta: dict | None = None, n_buckets: int | None = None,
-                  snap: dict | None = None) -> int:
-        """Full rewrite (bootstrap/backfill/rebucket path). df: data cols +
-        SYS_COLS. ``n_buckets`` overrides the bucket count for this and
-        all FUTURE snapshots (used by ``rebucket``). ``snap``: the current
-        snapshot when the caller already loaded it (the rewrites that read
-        ``df`` from the table commit on the snapshot they read)."""
-        snap = snap or self.snapshot()
+    def overwrite(self, df: DataFrame, lineage: dict | None = None) -> int:
+        """Replace every row of the table with ``df`` (bootstrap,
+        backfill): the data columns + ``_commit_seq``/``_event_seq``; a
+        missing ``_deleted`` reads as live, a missing ``_delta_seq`` as
+        0. External data is taken as is — no LWW resolve. One exchange:
+        ``_bucketed``'s bucket shuffle, as every rewrite."""
+        snap = self.snapshot()
         if "_deleted" not in df.columns:
             df = df.withColumn("_deleted", F.lit(False))
         if "_delta_seq" not in df.columns:
             df = df.withColumn("_delta_seq", F.lit(0).cast("long"))
-        if n_buckets is not None and n_buckets < 1:
-            raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-        key, nb = snap["key"], (n_buckets if n_buckets is not None else snap["n_buckets"])
+        nb = snap["n_buckets"]
         written = self._write_buckets(
-            df.withColumn("_bucket", bucket_expr(key, nb)).repartition(nb, F.col("_bucket")),
-            snap,
-        )
-        return self._commit_next(
-            snap, {**{str(b): [] for b in range(nb)}, **written},
-            lineage or {"op": "overwrite"}, n_buckets=nb, **(extra_meta or {}),
-        )
+            self._bucketed(df, snap["key"], nb, nb, resolve=False), snap)
+        return self._commit_next(snap, _replace_buckets(snap["buckets"], range(nb), written),
+                                 lineage or {"op": "overwrite"})
 
     # ---------------- refs, rollback, write-audit-publish ----------------
 

@@ -56,15 +56,16 @@ def test_fresh_process_maintain_expires_tombstones(spark, tmp_path):
 
 def test_maintain_raises_without_any_watermark_source(spark, tmp_path):
     """With no in-memory high-water mark AND no metrics record carrying
-    one, tombstone expiry must refuse loudly — the old code silently
-    no-opped and returned {}."""
+    one (the metrics dir is lost), tombstone expiry must refuse loudly —
+    the old code silently no-opped and returned {}."""
     rows = [("a/r", "f1.py", "I", "0" * 40, 0, 0, 0, payload(1))]
     make_changelog(spark, str(tmp_path / "cl"), rows)
     ap = ChangeApplier(spark, str(tmp_path / "t"), str(tmp_path / "cl"),
-                       str(tmp_path / "s"), n_buckets=4, collect_metrics=False)
+                       str(tmp_path / "s"), n_buckets=4)
     ap.run()
+    shutil.rmtree(tmp_path / "s" / "metrics")
     ap2 = ChangeApplier(spark, str(tmp_path / "t"), str(tmp_path / "cl"),
-                        str(tmp_path / "s"), n_buckets=4, collect_metrics=False)
+                        str(tmp_path / "s"), n_buckets=4)
     with pytest.raises(RuntimeError, match="high-water mark"):
         ap2.maintain(tombstones=True, snapshots=False)
     # snapshots-only maintenance needs no watermark and still works

@@ -262,7 +262,7 @@ def test_method_call_on_set_literal(spark):
 # ---------------- overwrite validation ----------------
 
 
-def test_overwrite_rejects_zero_buckets(spark, tmp_path):
+def test_rebucket_rejects_zero_buckets(spark, tmp_path):
     from nifi_processors_spark.operators.apply import ChangeApplier
     from nifi_processors_spark.plans.table import IceliteTable
 
@@ -278,7 +278,7 @@ def test_overwrite_rejects_zero_buckets(spark, tmp_path):
     ap.run()
     t = IceliteTable(spark, str(tmp_path / "t"))
     with pytest.raises(ValueError, match="n_buckets"):
-        t.overwrite(t.read(include_deleted=True), n_buckets=0)
+        t.rebucket(0)
 
 
 # ---------------- native session_window twin ----------------
