@@ -10,9 +10,9 @@ On a real cluster (the north rule's deployment shape)::
 
 URI paths (hdfs://, s3a://, file:) are supported end-to-end: data files
 go through Spark's readers/writers, and the engine's metadata layer
-(snapshots, markers, registry, metrics) goes through Hadoop's FileSystem
+(snapshots, markers, metrics) goes through Hadoop's FileSystem
 via plans/fsio.py (exercised in tests/test_fsio.py with file: URIs).
-Replaced pointer files (VERSION, registry) use numbered generation files
+Replaced pointer files (VERSION, REFS, view pointers) use numbered generation files
 on remote stores — readers never observe a missing pointer mid-swap; on
 raw S3 the only remaining caveat is write-once visibility of the data
 files themselves (front them with a catalog for multi-writer setups).

@@ -22,17 +22,17 @@ named phases of ``ChangeApplier.apply_batch_df``:
                 columns -> LWW bucket MERGE (CoW) or delta append (MOR);
                 the drift aggregates (schema_of_variant_agg over EVERY row)
                 ride it as an observation, or, streaming, one extra job
-    evolve      drift? icelite ALTER, then registry persist (a crash between
-                them leaves the registry behind the table, which the
-                tolerant diff repairs on replay — never ahead), then an
+    evolve      drift? ``SchemaRegistry.observe`` commits it as one icelite
+                ALTER — the table's schema history is the registry, so
+                there is no second record to fall behind — then an
                 idempotent re-merge with the evolved schema (the LWW
                 tie-break prefers the change row)
     quarantine  bad-key and malformed rows, as read
     compact     MOR, every ``compact_every`` epochs: the delta buckets
     record      lineage/metrics record, then the exactly-once marker
 
-The table snapshot and the schema registry are loaded once per epoch and
-reloaded only after an ALTER or a registry commit. Only affected buckets
+The table snapshot, and with it the payload schema's versions, is loaded
+once per epoch and reloaded only after an ALTER. Only affected buckets
 of the target are read/rewritten, and nothing runs a Python row loop.
 """
 
@@ -45,23 +45,19 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..metrics import MetricsLog
 from ..plans import fsio
 from ..plans.checkpoint import CheckpointLog
 from ..plans.registry import (
+    ENVELOPE_KEY,
     SchemaRegistry,
     detect_payload_schema,
-    diff_schemas,
     fields_from_variant_schema,
     merge_field_sets,
-    _SPARK_TYPE,
 )
 from ..plans.table import IceliteTable, _type_from_json, bucket_expr
 from .envelope import MALFORMED_COL, VARIANT_COL, payload_field, stage_payload
-
-ENVELOPE_KEY = ["repo", "path"]
 
 
 def _badkey() -> Column:
@@ -96,8 +92,7 @@ class _Epoch:
     input_files: list[str]
     t0: float
     table: IceliteTable | None
-    snap: dict | None  # loaded once; reloaded after an ALTER / registry commit
-    versions: list[dict]  # registry versions, same rule
+    snap: dict | None  # loaded once; reloaded after an ALTER
     stats: Future | None = None
     affected: list[int] | None = None  # known before the merge, or None
     sid: int | None = None  # snapshot the epoch leaves the table at
@@ -157,9 +152,7 @@ class ChangeApplier:
         self.changelog_dir = changelog_dir
         self.checkpoints = CheckpointLog(fsio.join(state_dir, "checkpoints"))
         self.metrics = MetricsLog(fsio.join(state_dir, "metrics"))
-        self.registry = SchemaRegistry(
-            fsio.join(state_dir, "schema_registry.json"), rename_hints
-        )
+        self.registry = SchemaRegistry(spark, table_path, n_buckets, rename_hints)
         self.quarantine_dir = fsio.join(state_dir, "quarantine")
         self.n_buckets = n_buckets
         if merge_mode not in ("cow", "mor"):
@@ -210,23 +203,9 @@ class ChangeApplier:
         return None
 
     def _ensure_table(self, payload_fields: list[tuple[str, str]]) -> IceliteTable:
+        """The target table; registering ``payload_fields`` creates it."""
         t = self._table()
-        if t is not None:
-            return t
-        schema = T.StructType(
-            [
-                T.StructField("repo", T.StringType(), False),
-                T.StructField("path", T.StringType(), False),
-                T.StructField("commit", T.StringType(), True),
-            ]
-            + [T.StructField(n, _SPARK_TYPE[ty], True) for n, ty in payload_fields]
-        )
-        return IceliteTable.create(
-            self.spark, self.table_path, schema, key=ENVELOPE_KEY, n_buckets=self.n_buckets
-        )
-
-    def _registry_versions(self) -> list[dict]:
-        return self.registry._load()["versions"]
+        return t if t is not None else self.registry.register(payload_fields)
 
     # ------------- the apply -------------
 
@@ -268,17 +247,16 @@ class ChangeApplier:
         table = self._table()
         snap = table.snapshot() if table is not None else None
         ep = _Epoch(epoch, epoch if marker is None else marker, input_files or [], t0,
-                    table, snap, self._registry_versions(),
-                    sid=snap["snapshot_id"] if snap is not None else None)
+                    table, snap, sid=snap["snapshot_id"] if snap is not None else None)
         wm = snap.get("tombstone_watermark") if snap is not None else None
         # the guard and a table's bootstrap need the stats first; otherwise
         # the stats job runs in the background
-        pool = ThreadPoolExecutor(max_workers=1) if ep.versions and wm is None else None
+        pool = ThreadPoolExecutor(max_workers=1) if table is not None and wm is None else None
         try:
             self._stats(raw, ep, pool)
             if wm is not None and self._guard(ep, wm):
                 return self._record(ep, [], stale_wm=wm)
-            if not ep.versions:
+            if table is None:
                 self._bootstrap(raw, ep)
             staged = self._stage(raw)
             observed, drift = self._drift_probe(staged, observe_metrics)
@@ -372,10 +350,8 @@ class ChangeApplier:
         """A table's FIRST epoch pays one extra detection job so the table
         is born with the right payload columns (instead of every new
         table's epoch 0 taking the drift re-merge path)."""
-        fields = detect_payload_schema(raw)
-        ep.table = self._ensure_table(fields)
-        self.registry.register(fields, ep.epoch)
-        ep.snap, ep.versions = ep.table.snapshot(), self._registry_versions()
+        ep.table = self._ensure_table(detect_payload_schema(raw))
+        ep.snap = ep.table.snapshot()
         ep.sid = ep.snap["snapshot_id"]
 
     @staticmethod
@@ -409,8 +385,9 @@ class ChangeApplier:
         rows the new one) coalesces into the current column — aligned to
         the snapshot's columns (null for columns this epoch lacks), minus
         bad-key and malformed rows."""
-        resolve = _rename_resolver(ep.versions)
-        reg = {f["name"]: f["type"] for f in ep.versions[-1]["fields"]}
+        versions = self.registry.versions(ep.snap)
+        resolve = _rename_resolver(versions)
+        reg = {f["name"]: f["type"] for f in versions[-1]["fields"]}
         # a historical name is typed as its current target
         typed = {**{old: reg.get(new, "string") for old, new in resolve.items()}, **reg}
         cols = {c: F.col(c) for c in staged.columns}
@@ -450,34 +427,20 @@ class ChangeApplier:
         return True
 
     def _evolve(self, ep: _Epoch, drift: Row, crash: Callable[[str, int], None] | None) -> bool:
-        """Phase: diff the epoch's payload schema against the registry. On
-        drift: ALTER first, registry persist second (a crash between them
-        leaves the registry behind the table, which the tolerant filter
-        repairs on replay — never ahead), reload both, and return True so
-        the caller re-merges with the evolved schema."""
+        """Phase: hand the epoch's payload schema to the registry. On drift
+        it commits one ALTER; reload the snapshot and return True so the
+        caller re-merges with the evolved schema."""
         ep.n_malformed = int(drift["malformed"] or 0)
         fields = fields_from_variant_schema(drift["vschema"])
-        resolve = _rename_resolver(ep.versions)
+        resolve = _rename_resolver(self.registry.versions(ep.snap))
         if resolve:  # late rows may still carry already-renamed names
             fields = merge_field_sets([[(resolve.get(n, n), t) for n, t in fields]])
-        registered = [(f["name"], f["type"]) for f in ep.versions[-1]["fields"]]
-        renames, adds = diff_schemas(registered, fields, self.registry.rename_hints)
+        renames, adds = self.registry.observe(fields, ep.epoch, ep.snap)
         if not (renames or adds):
             return False
-        tcols = set(ep.table.field_names(ep.snap))
-        eff_renames = {o: n for o, n in renames.items() if o in tcols and n not in tcols}
-        eff_adds = [(n, ty) for n, ty in adds if n not in tcols]
-        if eff_renames or eff_adds:
-            ep.table.alter(
-                eff_renames,
-                [(n, _SPARK_TYPE[ty]) for n, ty in eff_adds],
-                lineage={"op": "alter", "epoch": ep.epoch, "renames": eff_renames,
-                         "adds": [n for n, _ in eff_adds]},
-            )
-            if crash is not None:
-                crash("after_alter", ep.epoch)
-        self.registry.commit_version(renames, adds, ep.epoch)
-        ep.snap, ep.versions = ep.table.snapshot(), self._registry_versions()
+        if crash is not None:
+            crash("after_alter", ep.epoch)
+        ep.snap = ep.table.snapshot()
         return True
 
     def _quarantine(self, ep: _Epoch, staged: DataFrame, cols: list[str],
@@ -522,7 +485,7 @@ class ChangeApplier:
             "rows_corrupt": n_badkey + ep.n_malformed,
             "affected_buckets": ep.affected_buckets,
             "wall_ms": int((time.monotonic() - ep.t0) * 1000),
-            "schema_version": ep.versions[-1]["version"] if ep.versions else 0,
+            "schema_version": ep.snap["schema_version"],
             "input_files": ep.input_files,
             "rows_upserted": int(
                 sum(r["rows"] - r["dels"] - r["badkey"] for r in per_bucket)

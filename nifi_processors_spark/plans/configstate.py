@@ -3,8 +3,8 @@
 `ExecuteRuleEngine` stores the rule-zip filename + lastModified in NiFi
 LOCAL state and reloads the engine when they change (reference:
 ExecuteRuleEngine.java:108 `@Stateful`, :315-322 state write, :330-336
-reload). The engine analogue versions the CONFIG the same way the schema
-registry versions the DATA: a JSON state file records (path, mtime,
+reload). The engine analogue versions the CONFIG the way the table's
+schema history versions the DATA: a JSON state file records (path, mtime,
 sha256, config_epoch); `load()` re-parses the rule project only when the
 artifact actually changed and bumps the config epoch, so lineage records
 can say *which* rule version processed an epoch.

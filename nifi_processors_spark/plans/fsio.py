@@ -1,6 +1,6 @@
-"""Filesystem shim for engine metadata IO (snapshots, markers, registry,
-metrics) — local paths use the stdlib, URI paths (hdfs://, s3a://, ...)
-go through Hadoop's FileSystem API via the active SparkSession's JVM.
+"""Filesystem shim for engine metadata IO (snapshots, markers, metrics)
+— local paths use the stdlib, URI paths (hdfs://, s3a://, ...) go
+through Hadoop's FileSystem API via the active SparkSession's JVM.
 
 Why: data files always go through Spark readers/writers (already
 cluster-portable), but icelite's METADATA layer needs small-file
@@ -145,7 +145,7 @@ def rename(src: str, dst: str) -> None:
     when dst is absent; when dst EXISTS, ``FileContext.rename`` with
     ``Options.Rename.OVERWRITE`` — the atomic clobbering rename on HDFS and
     local FS, so a reader of a swapped pointer (table VERSION, checkpoint
-    marker, registry JSON) never observes a missing file. The old
+    marker, view pointer) never observes a missing file. The old
     delete-then-rename left a window where a crash deleted the only copy."""
     if not is_remote(src):
         os.replace(src, dst)
@@ -198,7 +198,7 @@ def read_json(path: str) -> Any:
 #
 # write_json_atomic is fine for write-once / idempotent files (snapshots,
 # markers, metrics), but a POINTER that is repeatedly REPLACED (table
-# meta/VERSION, the schema registry) must never pass through a
+# meta/VERSION, a view pointer) must never pass through a
 # deleted-with-no-replacement state: Hadoop's overwrite-rename is only
 # atomic on HDFS proper (the local/AbstractFileSystem default — and S3A —
 # is delete-then-rename under the hood). So on remote paths a pointer is
@@ -256,9 +256,9 @@ def load_json(path: str, default: Any = _RAISE) -> Any:
     is unreadable": when a generation (or bare file) is OBSERVED but every
     read attempt fails — corrupt file, persistent IO error — the last read
     error is re-raised instead of returning ``default``. Returning the
-    default there would silently reset live state (a schema registry
-    restarting at version 0 over real data); absence must be a clean
-    observation, never an error swallowed (ADVICE r3)."""
+    default there would silently reset live state (an outbox pointer
+    restarting at table birth re-emits every published range); absence
+    must be a clean observation, never an error swallowed (ADVICE r3)."""
     if not is_remote(path):
         if os.path.exists(path):
             return json.loads(read_text(path))

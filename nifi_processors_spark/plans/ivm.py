@@ -34,20 +34,23 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def _view_cols(value_cols: list[str], count_col: str) -> list[str]:
-    return [count_col] + [f"sum_{c}" for c in value_cols]
+COUNT_COL = "n_rows"
+KEEP_GENERATIONS = 2  # the live generation and the one before it
+
+
+def _view_cols(value_cols: list[str]) -> list[str]:
+    return [COUNT_COL] + [f"sum_{c}" for c in value_cols]
 
 
 def grouped_agg(
     df: DataFrame,
     group_cols: list[str],
     value_cols: list[str],
-    count_col: str = "n_rows",
 ) -> DataFrame:
     """The from-scratch materialization (used once at bootstrap; after
     that, maintain with deltas)."""
     return df.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).alias(count_col),
+        F.count(F.lit(1)).alias(COUNT_COL),
         *[F.sum(c).alias(f"sum_{c}") for c in value_cols],
     )
 
@@ -56,7 +59,6 @@ def agg_delta(
     changes: DataFrame,
     group_cols: list[str],
     value_cols: list[str],
-    count_col: str = "n_rows",
 ) -> DataFrame:
     """Fold a change feed (``IceliteTable.changes`` output) into one
     signed delta per group — a single aggregation over the feed, partial
@@ -65,7 +67,7 @@ def agg_delta(
         F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
     ).otherwise(F.lit(-1))
     return changes.groupBy(*group_cols).agg(
-        F.sum(sign).alias(count_col),
+        F.sum(sign).alias(COUNT_COL),
         *[F.sum(sign * F.col(c)).alias(f"sum_{c}") for c in value_cols],
     )
 
@@ -75,14 +77,13 @@ def apply_agg_delta(
     delta: DataFrame,
     group_cols: list[str],
     value_cols: list[str],
-    count_col: str = "n_rows",
 ) -> DataFrame:
     """Merge a signed delta into the previous materialization: one
     null-safe full-outer key join (new groups enter via the delta side,
     untouched groups pass through), sums add, and groups whose row count
     hits zero vanish — the incremental result equals ``grouped_agg`` of
     the new state."""
-    mcols = _view_cols(value_cols, count_col)
+    mcols = _view_cols(value_cols)
     d = delta.select(
         *[F.col(c).alias(f"_d_{c}") for c in group_cols],
         *[F.col(c).alias(f"_d_{c}") for c in mcols],
@@ -100,7 +101,7 @@ def apply_agg_delta(
             for c in mcols
         ],
     )
-    return merged.filter(F.col(count_col) != 0)
+    return merged.filter(F.col(COUNT_COL) != 0)
 
 
 class MaterializedView:
@@ -134,14 +135,13 @@ class MaterializedView:
     """
 
     def __init__(self, spark, path: str, group_cols: list[str],
-                 value_cols: list[str], keep_generations: int = 2):
+                 value_cols: list[str]):
         from . import fsio
 
         self.spark = spark
         self.path = path
         self.group_cols = list(group_cols)
         self.value_cols = list(value_cols)
-        self.keep_generations = keep_generations
         self._fsio = fsio
         self._ptr = fsio.join(path, "VIEW")
 
@@ -219,7 +219,7 @@ class MaterializedView:
              if e.startswith("gen") and e[3:].isdigit()),
             reverse=True,
         )
-        for g in gens[max(self.keep_generations, 1):]:
+        for g in gens[KEEP_GENERATIONS:]:
             name = f"gen{g}"
             if name not in keep:
                 fsio.rmtree(fsio.join(self.path, name))

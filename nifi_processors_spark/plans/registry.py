@@ -10,28 +10,41 @@ v2 {language, content, size_bytes}) with an explicit registry:
     (``schema_of_variant_agg`` — one skinny JVM-side aggregation; a v2
     payload first appearing on row 51 of an epoch is still seen, unlike
     a driver-side sample),
-  * diff against the registered schema,
+  * diff against the current version,
   * classify drift into RENAME (same type, one-for-one swap, or an
     explicit hint) vs ADD,
-  * record a new registry version; the caller issues icelite ALTER
-    (rename keeps field id, add backfills null) BEFORE the version is
-    persisted, so a crash between the two leaves the registry behind
-    the table (repairable: the next diff is tolerant) — never ahead.
+  * commit the new version as ONE icelite ALTER (rename keeps the field
+    id, add allocates one and reads null in older files).
 
-Registry state is a JSON file (atomic replace), versions append-only:
-``{"versions": [{"version", "from_epoch", "fields": [{name, type}],
-"renames": {old: new}}]}``.
+The registry stores nothing of its own. As in Iceberg table metadata, the
+table snapshot's ``schemas`` (one field-id list per schema version) are
+the schema history: a payload version is a table schema minus the change
+envelope's columns (``repo``, ``path``, ``commit``), and its renames are
+the field ids whose name changed from the version before. Registering is
+the table's create and committing a version is its ALTER, so a drift
+epoch writes one schema record, and a table rollback takes the payload
+schema back with it. A version reads ``{"version", "fields": [{name,
+type}], "renames": {old: new}}``.
 """
 
 from __future__ import annotations
+
+import json
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import fsio
+from .table import IceliteTable
 
-_JSON_TYPE = {str: "string", bool: "boolean", int: "long", float: "double"}
+# the change envelope's columns lead every table; payload fields follow
+ENVELOPE = T.StructType([
+    T.StructField("repo", T.StringType(), False),
+    T.StructField("path", T.StringType(), False),
+    T.StructField("commit", T.StringType(), True),
+])
+ENVELOPE_KEY = ["repo", "path"]
+
 _SPARK_TYPE = {
     "string": T.StringType(),
     "boolean": T.BooleanType(),
@@ -206,89 +219,84 @@ def diff_schemas(
 
 
 class SchemaRegistry:
-    def __init__(self, path: str, rename_hints: dict[str, str] | None = None):
-        self.path = path
+    """The payload-schema versions of the icelite table at ``table_path``
+    (created with ``n_buckets`` buckets). Every method that reads takes
+    the snapshot the caller holds; without one it loads the current."""
+
+    def __init__(self, spark, table_path: str, n_buckets: int = 32,
+                 rename_hints: dict[str, str] | None = None):
+        self.table = IceliteTable(spark, table_path)
+        self.n_buckets = n_buckets
         self.rename_hints = rename_hints or {}
 
-    def _load(self) -> dict:
-        return fsio.load_json(self.path, default={"versions": []})
+    def versions(self, snap: dict | None = None) -> list[dict]:
+        """Every payload version of ``snap``, oldest first; none before
+        the table exists."""
+        if snap is None:
+            if not IceliteTable.exists(self.table.path):
+                return []
+            snap = self.table.snapshot()
+        out, names = [], {}
+        for v in range(1, snap["schema_version"] + 1):
+            fields = [f for f in snap["schemas"][str(v)] if f["name"] not in ENVELOPE.names]
+            out.append({
+                "version": v,
+                "fields": [{"name": f["name"], "type": json.loads(f["type"])} for f in fields],
+                "renames": {names[f["id"]]: f["name"] for f in fields
+                            if names.get(f["id"], f["name"]) != f["name"]},
+            })
+            names = {f["id"]: f["name"] for f in fields}
+        return out
 
-    def _save(self, obj: dict) -> None:
-        parent = self.path.rsplit("/", 1)[0] if "/" in self.path else "."
-        fsio.makedirs(parent)
-        # replace-safe publish: the registry file is REPLACED per version —
-        # a crash mid-swap must never leave it deleted (fsio.publish_json)
-        fsio.publish_json(self.path, obj)
-
-    def current(self) -> dict | None:
-        vs = self._load()["versions"]
+    def current(self, snap: dict | None = None) -> dict | None:
+        vs = self.versions(snap)
         return vs[-1] if vs else None
 
-    def register(self, fields: list[tuple[str, str]], from_epoch: int) -> dict:
-        """Register the initial schema (version 1)."""
-        obj = self._load()
-        ver = {
-            "version": len(obj["versions"]) + 1,
-            "from_epoch": from_epoch,
-            "fields": [{"name": n, "type": t} for n, t in fields],
-            "renames": {},
-        }
-        obj["versions"].append(ver)
-        self._save(obj)
-        return ver
+    def register(self, fields: list[tuple[str, str]]) -> IceliteTable:
+        """Version 1: create the table, envelope columns first. A payload
+        field named like an envelope column is dropped — the envelope
+        value wins."""
+        schema = T.StructType(ENVELOPE.fields + [
+            T.StructField(n, _SPARK_TYPE[t], True) for n, t in _payload(fields)])
+        return IceliteTable.create(self.table.spark, self.table.path, schema,
+                                   key=ENVELOPE_KEY, n_buckets=self.n_buckets)
 
-    def diff(self, fields: list[tuple[str, str]]) -> tuple[dict | None, dict[str, str], list[tuple[str, str]]]:
+    def diff(self, fields: list[tuple[str, str]], snap: dict | None = None
+             ) -> tuple[dict | None, dict[str, str], list[tuple[str, str]]]:
         """PURE drift check: compare an epoch's payload schema with the
-        registered one. Returns (current_version_or_None, renames, adds)
-        — persists nothing. The caller applies the table ALTER first and
-        only then calls ``commit_version`` (crash between the two leaves
-        the registry *behind* the table, which the tolerant ALTER path in
-        the applier repairs on replay; the old persist-before-ALTER order
-        could silently null renamed columns forever)."""
-        cur = self.current()
+        current version. Returns (current_version_or_None, renames, adds)
+        — commits nothing."""
+        fields = _payload(fields)
+        cur = self.current(snap)
         if cur is None:
-            return None, {}, [(n, t) for n, t in fields]
+            return None, {}, fields
         old = [(f["name"], f["type"]) for f in cur["fields"]]
         renames, adds = diff_schemas(old, fields, self.rename_hints)
         return cur, renames, adds
 
-    def commit_version(
-        self,
-        renames: dict[str, str],
-        adds: list[tuple[str, str]],
-        epoch: int,
-    ) -> dict:
-        """Persist a new version from a previously-computed diff (call
-        AFTER the table ALTER commits). No-op returns the current version
-        when there is no drift."""
-        cur = self.current()
-        if cur is None:
-            return self.register(adds, epoch)
-        if not renames and not adds:
-            return cur
-        merged: list[dict] = []
-        for f in cur["fields"]:
-            nm = renames.get(f["name"], f["name"])
-            merged.append({"name": nm, "type": f["type"]})
-        for n, t in adds:
-            merged.append({"name": n, "type": t})
-        obj = self._load()
-        ver = {
-            "version": cur["version"] + 1,
-            "from_epoch": epoch,
-            "fields": merged,
-            "renames": renames,
-        }
-        obj["versions"].append(ver)
-        self._save(obj)
-        return ver
+    def commit_version(self, renames: dict[str, str], adds: list[tuple[str, str]],
+                       epoch: int) -> int:
+        """Commit a previously-computed diff as one table ALTER; returns
+        its snapshot id."""
+        return self.table.alter(
+            renames, [(n, _SPARK_TYPE[t]) for n, t in adds],
+            lineage={"op": "alter", "epoch": epoch, "renames": renames,
+                     "adds": [n for n, _ in adds]},
+        )
 
-    def observe(self, fields: list[tuple[str, str]], epoch: int) -> tuple[dict, dict[str, str], list[tuple[str, str]]]:
-        """Back-compat: diff + commit in one call (tests / ad-hoc use).
-        The apply loop uses diff -> table.alter -> commit_version."""
-        cur, renames, adds = self.diff(fields)
+    def observe(self, fields: list[tuple[str, str]], epoch: int, snap: dict | None = None
+                ) -> tuple[dict[str, str], list[tuple[str, str]]]:
+        """diff + commit: register the first version, ALTER on drift.
+        Returns the (renames, adds) committed on top of ``snap``."""
+        cur, renames, adds = self.diff(fields, snap)
         if cur is None:
-            return self.register(fields, epoch), {}, []
-        if not renames and not adds:
-            return cur, {}, []
-        return self.commit_version(renames, adds, epoch), renames, adds
+            self.register(fields)
+            return {}, []
+        if renames or adds:
+            self.commit_version(renames, adds, epoch)
+        return renames, adds
+
+
+def _payload(fields: list[tuple[str, str]]) -> list[tuple[str, str]]:
+    """``fields`` without the envelope's names."""
+    return [(n, t) for n, t in fields if n not in ENVELOPE.names]

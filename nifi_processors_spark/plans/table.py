@@ -240,9 +240,16 @@ def _parquet_footer_stats(path: str, bloom_cols: tuple[str, ...] = ()) -> dict |
     try:
         import pyarrow.parquet as pq
 
-        md = pq.ParquetFile(path).metadata
+        pf = pq.ParquetFile(path)
     except Exception:
         return None
+    with pf:  # one open serves the footer, _deleted and bloom-column reads
+        return _file_stats(pf, bloom_cols)
+
+
+def _file_stats(pf, bloom_cols: tuple[str, ...]) -> dict:
+    """``_parquet_footer_stats`` of an open ``pyarrow.parquet.ParquetFile``."""
+    md = pf.metadata
     mins: dict[str, Any] = {}
     maxs: dict[str, Any] = {}
     bad: set[str] = set()
@@ -313,7 +320,7 @@ def _parquet_footer_stats(path: str, bloom_cols: tuple[str, ...] = ()) -> dict |
         try:
             import pyarrow.compute as pc
 
-            tcol = pq.ParquetFile(path).read(columns=["_deleted"])
+            tcol = pf.read(columns=["_deleted"])
             dead = pc.sum(tcol.column("_deleted")).as_py() or 0
             out["live_rows"] = md.num_rows - int(dead)
         except Exception:
@@ -327,7 +334,6 @@ def _parquet_footer_stats(path: str, bloom_cols: tuple[str, ...] = ()) -> dict |
         # wrote moments ago; on a real cluster the writer task computes
         # the bloom during the write and ships it in its commit message
         try:
-            pf = pq.ParquetFile(path)
             present = {c for c in bloom_cols if c in pf.schema_arrow.names}
             blooms = {}
             for c in sorted(present):

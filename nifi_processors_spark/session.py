@@ -73,7 +73,7 @@ def get_spark(
     return spark
 
 
-def fan_out(df, min_partitions: int | None = None, by: list[str] | None = None):
+def fan_out(df, by: list[str] | None = None):
     """Scale-adaptive scan fan-out (optimization guide §2.5, "input skew:
     one huge unsplittable file ... repartition immediately after the
     read"). A parquet file is parallelizable only at row-group
@@ -102,17 +102,15 @@ def fan_out(df, min_partitions: int | None = None, by: list[str] | None = None):
     """
     from pyspark.sql import functions as F
 
-    spark = df.sparkSession
-    if min_partitions is None:
-        min_partitions = spark.sparkContext.defaultParallelism
+    n_parallel = df.sparkSession.sparkContext.defaultParallelism
     try:
         n = df.rdd.getNumPartitions()
     except Exception:  # non-queryable plan (e.g. streaming): leave as-is
         return df
-    if n >= min_partitions:
+    if n >= n_parallel:
         return df
     if by:
         # spread by hash of the unique key: unique values >> partitions,
         # so the spread is even (guide §2.5 "20-100x more distinct keys")
-        return df.repartition(min_partitions, F.xxhash64(*[F.col(c) for c in by]))
-    return df.repartition(min_partitions)
+        return df.repartition(n_parallel, F.xxhash64(*[F.col(c) for c in by]))
+    return df.repartition(n_parallel)

@@ -23,6 +23,8 @@ def test_cli_roundtrip(spark, tmp_path, capsys):
     assert [e["epoch"] for e in epochs] == [0, 1]
     state = json.loads(out[3])
     assert state["rows"] > 0 and "repo" in state["schema"]
+    # the table's schema history is the only record of the payload schema
+    assert not (tmp_path / "s" / "schema_registry.json").exists()
 
 
 def test_cli_changes(spark, tmp_path, capsys):

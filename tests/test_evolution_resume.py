@@ -81,8 +81,8 @@ def test_mid_stream_schema_evolution(spark, evo_changelog, tmp_path):
             assert g["size_bytes"] == w["size_bytes"], k
         else:
             assert g["size_bytes"] is None, k
-    # registry recorded two versions
-    vs = ap.registry._load()["versions"]
+    # the table's schema history holds two payload versions
+    vs = ap.registry.versions()
     assert [v["version"] for v in vs] == [1, 2]
     assert vs[1]["renames"] == {"lang": "language"}
 

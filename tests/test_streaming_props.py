@@ -54,6 +54,8 @@ def test_stream_apply_matches_batch(spark, tmp_path, monkeypatch):
         for r in streaming.state().select("repo", "path", F.sha2("content", 256).alias("sha")).collect()
     }
     assert got == want
+    # the table's schema history is the only record of the payload schema
+    assert not (tmp_path / "ss" / "schema_registry.json").exists()
     # maintained view tracked the stream's micro-batches and equals a
     # from-scratch recompute of the final state
     view = {r["lang"]: r["n_rows"]
